@@ -67,6 +67,21 @@ def test_datetime_cells_render_iso(spark, tmp_path):
     assert got["d"] == "2024-12-31"
 
 
+def test_write_excel_row_cap(spark, tmp_path, monkeypatch):
+    """The sink writes up to EXCEL_MAX_ROWS rows and refuses one more,
+    from a single capped collect."""
+    from uofi_payroll_etl_main_spark import io as pio
+
+    monkeypatch.setattr(pio, "EXCEL_MAX_ROWS", 3)
+    at_cap = spark.createDataFrame([(str(i),) for i in range(3)], "`id` string")
+    path = write_excel(at_cap, str(tmp_path / "at_cap.xlsx"))
+    assert sorted(r["id"] for r in read_excel_stdlib(spark, path).collect()) == ["0", "1", "2"]
+    over = spark.createDataFrame([(str(i),) for i in range(4)], "`id` string")
+    with pytest.raises(ValueError, match="more than 3 rows"):
+        write_excel(over, str(tmp_path / "over.xlsx"))
+    assert not (tmp_path / "over.xlsx").exists()
+
+
 def test_shared_strings_reader(spark, tmp_path):
     """Files written by Excel/openpyxl use sharedStrings + s-type cells;
     the reader must resolve them (hand-built minimal package)."""

@@ -24,6 +24,7 @@ from uofi_payroll_etl_main_spark.joins import (
     dict_map_join,
     safe_merge_left,
 )
+from uofi_payroll_etl_main_spark.report import RunReport
 
 
 @pytest.fixture()
@@ -74,15 +75,22 @@ def test_safe_merge_left_warns_on_fanout_risk(spark, fact):
     dim = spark.createDataFrame(
         [Row(k="1-602", t="Physics"), Row(k="1-602", t="DIFFERENT")]  # same key, two values
     )
-    with pytest.warns(FanOutWarning):
-        safe_merge_left(fact, dim, "k").collect()
+    report = RunReport()
+    out = safe_merge_left(fact, dim, "k", report)
+    assert out.count() == 4  # warn-don't-fail: the fanned-out rows stand
+    with pytest.warns(FanOutWarning, match=r"left join on 'k' changed the row count: 3 -> 4"):
+        assert len(report.warnings) == 1
+    assert report.fan_out == [("left join on 'k'", 3, 4)]
 
 
 def test_safe_merge_left_quiet_when_unique(fact, dim):
+    report = RunReport()
     with warnings.catch_warnings():
         warnings.simplefilter("error", FanOutWarning)
-        out = safe_merge_left(fact, dim, "k")
+        out = safe_merge_left(fact, dim, "k", report)
         assert out.count() == 3
+        assert report.warnings == []
+    assert report.fan_out == [("left join on 'k'", 3, 3)]
 
 
 def test_dict_map_join(spark, fact):

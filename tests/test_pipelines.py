@@ -5,11 +5,16 @@ tie-break, keep-first winners, FY boundary, hyphen-less COLLEGE."""
 
 from __future__ import annotations
 
+import uuid
+import warnings
+
 import pytest
 from pyspark.sql import Row
 
+from uofi_payroll_etl_main_spark.io import write_excel
 from uofi_payroll_etl_main_spark.pipelines.cpa import CPA_OUTPUT_COLUMNS, run_cpa
 from uofi_payroll_etl_main_spark.pipelines.pua import run_pua
+from uofi_payroll_etl_main_spark.report import FanOutWarning
 
 
 @pytest.fixture(scope="module")
@@ -257,3 +262,54 @@ def test_cpa_caller_supplied_ingest_order(spark, dims):
     assert got[0]["Pay ID"] == "BW"
     assert got[0]["College Name"] == "Early"
     assert any("caller-supplied __ingest_order" in w for w in report.warnings)
+
+
+def _pua_fanout_report(spark, dims, tmp_path, ts_org):
+    _, ts_dept, overtime, te_m = dims
+    pua = spark.createDataFrame([_pua_row(), _pua_row(UIN="222222222", **{"TS ORG": "603"})])
+    out, report = run_pua(pua, ts_org, ts_dept, overtime, te_m)
+    write_excel(out, str(tmp_path / "pua_output.xlsx"))
+    return report
+
+
+def test_pua_fan_out_warns_after_the_write(spark, dims, tmp_path):
+    """A non-unique dim key is caught by the counts observed during the
+    Excel write: reading the report afterwards names the join and its
+    before -> after counts and emits FanOutWarning."""
+    ts_org = dims[0].union(
+        spark.createDataFrame([Row(**{"TS-Org Code": "1-602", "TS-Org Title": "Other"})])
+    )
+    report = _pua_fanout_report(spark, dims, tmp_path, ts_org)
+    with pytest.warns(FanOutWarning) as caught:
+        warned = report.warnings
+    msg = "left join on 'TS-Org Code' changed the row count: 2 -> 3"
+    assert warned == [msg]
+    assert [str(w.message) for w in caught] == [msg]
+    assert [n for n in report.fan_out if n[1] != n[2]] == [("left join on 'TS-Org Code'", 2, 3)]
+
+
+def test_pua_unique_dims_stay_quiet(spark, dims, tmp_path):
+    report = _pua_fanout_report(spark, dims, tmp_path, dims[0])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FanOutWarning)
+        assert report.warnings == []
+    assert [(b, a) for _, b, a in report.fan_out] == [(2, 2)] * 3
+
+
+def test_pipelines_build_without_jobs(spark, dims):
+    """Building both plans is lazy: every check (fan-out included) rides
+    the output action, so no Spark job runs before it."""
+    ts_org, ts_dept, overtime, te_m = dims
+    pua = spark.createDataFrame([_pua_row(), _pua_row(UIN="222222222")])
+    bw = spark.createDataFrame([_cert_row()], CERT_SCHEMA)
+    mn = spark.createDataFrame([_cert_row(PAY_ID="MN")], CERT_SCHEMA)
+    sc = spark.sparkContext
+    group = f"lazy-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build run_pua and run_cpa")
+    try:
+        run_pua(pua, ts_org, ts_dept, overtime, te_m)
+        run_cpa(bw, mn, ts_org, ts_dept, overtime, te_m, fy_end_year=2025)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -337,16 +337,23 @@ def xlsx_payload(header, body_rows) -> bytes:
     return buf.getvalue()
 
 
+# The driver-side Excel sink refuses outputs longer than this many rows.
+EXCEL_MAX_ROWS = 1_000_000
+
+
 def write_excel(df: DataFrame, path: str) -> str:
     """S6 -- Excel sink (ref to_excel :410-417): one workbook written
-    driver-side from a collected DataFrame (small outputs only).  For a
+    driver-side from a collected DataFrame (small outputs only).  One
+    action collects `limit(EXCEL_MAX_ROWS + 1)` and refuses more than the
+    cap, so the plan runs once (observed metrics such as the fan-out
+    counts ride it) and the driver holds at most cap + 1 rows.  For a
     distributed many-workbook sink use df.write.format("xlsx")
     (datasources.py), which runs the same xlsx_payload kernel one file
     per partition with a rename-on-commit protocol."""
-    n = df.count()
-    if n > 1_000_000:
-        raise ValueError(f"refusing driver-side Excel write of {n} rows")
-    payload = xlsx_payload(df.columns, [tuple(r) for r in df.collect()])
+    rows = df.limit(EXCEL_MAX_ROWS + 1).collect()
+    if len(rows) > EXCEL_MAX_ROWS:
+        raise ValueError(f"refusing driver-side Excel write of more than {EXCEL_MAX_ROWS} rows")
+    payload = xlsx_payload(df.columns, [tuple(r) for r in rows])
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with open(path, "wb") as f:
         f.write(payload)

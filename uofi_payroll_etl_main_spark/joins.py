@@ -1,4 +1,4 @@
-"""Broadcast left-join suite + fan-out guard (SURVEY.md section 2.3,
+"""Broadcast left-join suite + fan-out check (SURVEY.md section 2.3,
 J1-J9; V1).
 
 Every reference join is a left equi join of a big fact against a small,
@@ -7,24 +7,21 @@ deduplicated dimension projection (etl_payroll_pipeline.py :263-295,
 `F.broadcast` it, and left-join -- the fact side never shuffles, which is
 the difference between O(fact) scan and O(fact) shuffle at 100 TB.
 
-The fan-out guard (`safe_merge_left`, ref :226-232) has two modes:
-  * mode="dim-unique" (default, scale-safe): assert key uniqueness on the
-    DIMENSION side only -- O(|dim|) work, no second pass over the fact.
-    A unique dim key *proves* a left join cannot change the fact rowcount,
-    which is exactly the invariant the reference's before/after count
-    check observes.
-  * mode="count" (reference parity): literally count the fact before and
-    after.  Two extra fact-scale actions; only for small-data parity runs.
+The fan-out check (`safe_merge_left`, ref :226-232) is the reference's
+own: the fact row count before the join against the row count after it.
+Both counts are observed (`Dataset.observe`) during the action that
+consumes the result, so the check adds no job and no pass over the fact;
+the caller's RunReport reads them after that action.
 """
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from uofi_payroll_etl_main_spark import expressions as E
+from uofi_payroll_etl_main_spark.report import FanOutWarning, RunReport, observe_counts
 
 __all__ = [
     "broadcast_left_join",
@@ -45,10 +42,6 @@ __all__ = [
     "point_in_polygon",
     "point_in_polygon_sql",
 ]
-
-
-class FanOutWarning(UserWarning):
-    """Raised as a warning when a left join fans out the fact side (V1)."""
 
 
 def _dim_prep(dim: DataFrame, keep_cols: Sequence[str] | None, dedup: bool) -> DataFrame:
@@ -108,52 +101,22 @@ def safe_merge_left(
     fact: DataFrame,
     dim: DataFrame,
     on: str | Sequence[str] | Mapping[str, str],
+    report: RunReport,
     keep_cols: Sequence[str] | None = None,
-    dedup_dim: bool = True,
-    mode: str = "dim-unique",
     rename: Mapping[str, str] | None = None,
     drop_dim_keys: bool = False,
 ) -> DataFrame:
-    """J4/V1 -- guarded left join (ref `safe_merge_left` :226-232).
-
-    Reference behavior is warn-don't-fail; we keep that (warnings.warn)
-    so pipelines continue like the pandas original.
+    """J4/V1 -- `broadcast_left_join` with the reference's fan-out check
+    (ref `safe_merge_left` :226-232): the fact row counts before and
+    after the join are observed during the action that later consumes
+    the result, and `report` compares them when it is read after that
+    action.  Reference behavior is warn-don't-fail: a changed count
+    becomes a report warning plus a FanOutWarning, and the rows stand.
     """
-    dimp = _dim_prep(dim, keep_cols, dedup_dim)
-    if isinstance(on, Mapping):
-        dim_key_cols = list(on.values())
-    elif isinstance(on, str):
-        dim_key_cols = [on]
-    else:
-        dim_key_cols = list(on)
-
-    if mode == "dim-unique":
-        dup = (
-            dimp.groupBy(*dim_key_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            warnings.warn(
-                f"left join on {dim_key_cols} may fan out: dimension key not unique",
-                FanOutWarning,
-                stacklevel=2,
-            )
-        return broadcast_left_join(
-            fact, dimp, on, None, False, rename=rename, drop_dim_keys=drop_dim_keys
-        )
-
-    before = fact.count()
-    out = broadcast_left_join(
-        fact, dimp, on, None, False, rename=rename, drop_dim_keys=drop_dim_keys
-    )
-    after = out.count()
-    if before != after:
-        warnings.warn(
-            f"row count changed during merge: {before} -> {after}", FanOutWarning, stacklevel=2
-        )
+    fact, before = observe_counts(fact)
+    out = broadcast_left_join(fact, dim, on, keep_cols, rename=rename, drop_dim_keys=drop_dim_keys)
+    out, after = observe_counts(out)
+    report.watch_fan_out(f"left join on {on!r}", before, after)
     return out
 
 

@@ -104,24 +104,20 @@ def run_cpa(
     check_schema(df.drop(INGEST_ORDER_COL), EXPECTED_CERT_COLUMNS, report, "cpa_cert")
 
     # E4/E6 derived keys + E14 whole-frame strip (ref :473-482).
-    df = (
-        df.withColumn(
-            "TS-Org Code", E.concat_key(E.ensure_string("JOB_TS_COAS"), E.ensure_string("JOB_TS_ORGN"))
-        )
-        .withColumn("Dept TS-Org", E.prefix("TS-Org Code", 5))
-    )
+    org_code = E.concat_key(E.ensure_string("JOB_TS_COAS"), E.ensure_string("JOB_TS_ORGN"))
+    df = df.withColumns({"TS-Org Code": org_code, "Dept TS-Org": E.prefix(org_code, 5)})
     # E14 touches only string-typed columns; the struct-typed order column
     # passes through untouched.
     df = E.strip_all_strings(df)
-    df = (
-        df.withColumn("JOB_ECLS", E.ensure_string("JOB_ECLS"))
-        .withColumn("PAY_ID", E.ensure_string("PAY_ID"))
-        .withColumn("UIN Job", E.concat_key(E.ensure_string("UIN"), E.ensure_string("JOB")))
+    df = df.withColumns(
+        {
+            "JOB_ECLS": E.ensure_string("JOB_ECLS"),
+            "PAY_ID": E.ensure_string("PAY_ID"),
+            "UIN Job": E.concat_key(E.ensure_string("UIN"), E.ensure_string("JOB")),
+        }
     )
 
-    ot = overtime.withColumn("Job Eclass", E.ensure_string("Job Eclass")).withColumn(
-        "Pay ID", E.ensure_string("Pay ID")
-    )
+    ot = overtime.withColumns({c: E.ensure_string(c) for c in ("Job Eclass", "Pay ID")})
 
     # J5 org (rename -> TS-Org Name), J6 dept on the 5-char prefix key.
     df = broadcast_left_join(
@@ -146,9 +142,8 @@ def run_cpa(
         E.ensure_string("Time Entry Method").alias("Time Entry Method"),
     ).filter(F.col("TE M").isNotNull() & F.col("Time Entry Method").isNotNull())
     te_map = mode_agg(te, "TE M", "Time Entry Method", out_col="__mapped_te")
-    df = df.withColumn("TE M", E.ensure_string("TE M"))
     df = E.ensure_column(df, "Time Entry")
-    df = df.withColumn("Time Entry", E.ensure_string("Time Entry"))
+    df = df.withColumns({c: E.ensure_string(c) for c in ("TE M", "Time Entry")})
     df = dict_map_join(df, te_map, "TE M", "__mapped_te")
     df = df.withColumn("Time Entry", E.keep_or_replace("Time Entry", "__mapped_te")).drop(
         "__mapped_te"
@@ -178,7 +173,7 @@ def run_cpa(
 
     # E7 college split with no-hyphen guard (ref :549-560).
     code, name = E.split_first("COLLEGE")
-    df = df.withColumn("College Code", code).withColumn("College Name", name)
+    df = df.withColumns({"College Code": code, "College Name": name})
 
     # E13 bulk rename -> P8 20-col select -> P10 dup resolution
     # (ref :563-591).

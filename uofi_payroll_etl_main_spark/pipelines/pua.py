@@ -100,38 +100,44 @@ def run_pua(
     df = E.clean_headers(src)
 
     # Derived keys (ref :238-254); F.concat null-propagates like pandas `+`.
-    for c in ["TS COA", "TS ORG", "Department Name", "Year", "Pay ID", "Pay #", "Seq #",
-              "College Code", "College Name"]:
-        if c in df.columns:
-            df = df.withColumn(c, E.ensure_string(c))
-    df = (
-        df.withColumn("TS-Org Code", E.concat_key("TS COA", "TS ORG"))
-        .withColumn("DEPT Code", E.strip_decimal_str("DEPT Code"))
-        .withColumn("TS-Org Department Code", E.concat_key("TS COA", "DEPT Code"))
-        .withColumn("E-Class", E.ensure_string("ECLS DESC"))
-        .withColumn("Pay Event", E.concat_plain("Year", "Pay ID", "Pay #", "Seq #"))
-        .withColumn("POSN", E.strip_decimal_str("POSN"))
-        .withColumn("SUFF", E.strip_decimal_str("SUFF"))
-        .withColumn("Job Number", E.concat_key("POSN", "SUFF"))
-        .withColumn("College", E.concat_key("College Code", "College Name"))
+    text = ["TS COA", "TS ORG", "Department Name", "Year", "Pay ID", "Pay #", "Seq #",
+            "College Code", "College Name"]
+    df = df.withColumns({c: E.ensure_string(c) for c in text if c in df.columns})
+    dept, posn, suff = (E.strip_decimal_str(c) for c in ("DEPT Code", "POSN", "SUFF"))
+    df = df.withColumns(
+        {
+            "TS-Org Code": E.concat_key("TS COA", "TS ORG"),
+            "DEPT Code": dept,
+            "TS-Org Department Code": E.concat_key("TS COA", dept),
+            "E-Class": E.ensure_string("ECLS DESC"),
+            "Pay Event": E.concat_plain("Year", "Pay ID", "Pay #", "Seq #"),
+            "POSN": posn,
+            "SUFF": suff,
+            "Job Number": E.concat_key(posn, suff),
+            "College": E.concat_key("College Code", "College Name"),
+        }
     )
 
     # Header typo unification (ref :256-261), tolerant of absent sources.
     df = E.rename_columns(df, {k: v for k, v in RENAME_NORMALIZE.items() if k in df.columns})
 
-    # J1 org, J2 dept (differing key names) + title coalesce, J3 overtime.
-    df = safe_merge_left(df, ts_org, "TS-Org Code", keep_cols=["TS-Org Code", "TS-Org Title"])
+    # J1 org, J2 dept (differing key names), J3 overtime; each join's
+    # fan-out counts ride the output action (report reads them).  Keep the
+    # joins back to back: an observed count splits whole-stage codegen, and
+    # one join's "after" count and the next one's "before" share a split.
+    df = safe_merge_left(df, ts_org, "TS-Org Code", report, keep_cols=["TS-Org Code", "TS-Org Title"])
     df = safe_merge_left(
         df,
         ts_dept,
         {"TS-Org Department Code": "TS-Org Dept Code"},
+        report,
         keep_cols=["TS-Org Dept Code", "TS-Org Dept Title"],
     )
-    df = df.withColumn("TS-Org Dept Title", E.coalesce_cols("TS-Org Dept Title", "Department Name"))
     df = safe_merge_left(
         df,
         overtime,
         {"ECLS": "Job Eclass"},
+        report,
         keep_cols=["Job Eclass", "Overtime FLSA"],
         rename={"Overtime FLSA": "Overtime"},
         drop_dim_keys=True,
@@ -142,7 +148,9 @@ def run_pua(
                      E.ensure_string("Time Entry Method").alias("Time Entry Method"))
     te = te.filter(F.col("TE M").isNotNull() & F.col("Time Entry Method").isNotNull())
     te_map = mode_agg(te, "TE M", "Time Entry Method", out_col="__mapped_te")
-    df = df.withColumn("TE M", E.ensure_string("TE M"))
+    # Dept title coalesce (ref :273-274), after J3 so the joins stay adjacent.
+    dept_title = E.coalesce_cols("TS-Org Dept Title", "Department Name")
+    df = df.withColumns({"TS-Org Dept Title": dept_title, "TE M": E.ensure_string("TE M")})
     df = E.ensure_column(df, "Time Entry")
     df = dict_map_join(df, te_map, "TE M", "__mapped_te")
     df = df.withColumn("Time Entry", E.keep_or_replace("Time Entry", "__mapped_te")).drop(
@@ -160,25 +168,23 @@ def run_pua(
         df_fin, ["UIN", "Pay Event", "Job Number"], order_col=INGEST_ORDER_COL
     ).drop(INGEST_ORDER_COL)
 
-    # E16 type normalization + E11 ADJ default (ref :319-328).
-    for c in df_fin.columns:
-        if c != "Calc Date":
-            df_fin = df_fin.withColumn(c, E.ensure_string(c))
+    # E16 type normalization + E11 ADJ default (ref :319-328), one
+    # projection: the ADJ pair is set from the original (trimmed) code, so
+    # the desc's blankish-test never sees the defaulted 'INT'.
+    norm = {c: E.ensure_string(c) for c in df_fin.columns if c != "Calc Date"}
     if "Calc Date" in df_fin.columns:
-        df_fin = df_fin.withColumn("Calc Date", E.to_ts_coerce("Calc Date"))
-    if "ADJ Reason Code" in df_fin.columns and "ADJ Reason DESC" in df_fin.columns:
-        code, desc = E.null_blank_default("ADJ Reason Code", "ADJ Reason DESC")
-        # both in ONE projection: chained withColumn would overwrite the
-        # code first, so the desc's blankish-test would see 'INT' and
-        # never fire (ref :324-328 sets the pair from the original value)
-        df_fin = df_fin.withColumns({"ADJ Reason Code": code, "ADJ Reason DESC": desc})
+        norm["Calc Date"] = E.to_ts_coerce("Calc Date")
+    if "ADJ Reason Code" in norm and "ADJ Reason DESC" in norm:
+        norm["ADJ Reason Code"], norm["ADJ Reason DESC"] = E.null_blank_default(
+            norm["ADJ Reason Code"], norm["ADJ Reason DESC"]
+        )
+    df_fin = df_fin.withColumns(norm)
 
-    # E15 output contract with null padding (ref :330-368).
+    # E15 output contract with null padding (ref :330-368).  Every column
+    # is already a trimmed string or the coerced Calc Date, which is all
+    # the reference's final strip/cast (:370-374) does; only renames remain.
     out, padded = E.output_contract(df_fin, PUA_COL_MAP)
     if padded:
         report.missing_output_sources["pua"] = padded
-
-    # Final strip/cast + renames (ref :370-380).
-    out = E.finalize_output(out, date_cols=["Calc Date"])
     out = E.rename_columns(out, FINAL_RENAMES)
     return out, report

@@ -28,7 +28,7 @@ from .catalog import build_catalog, stamped_name
 from .dedup import dedup_full, dedup_keys_tolerant, keep_first
 from .io import load_table, read_csv, write_csv_single
 from .joins import broadcast_left_join, dict_map_join, safe_merge_left
-from .report import check_schema, table_counts
+from .report import RunReport, check_schema, table_counts
 from .setops import except_rows, intersect_rows, union_by_name
 
 SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", ".scratch")
@@ -189,7 +189,7 @@ def j3(spark, sf):
 def j4(spark, sf):
     nat = _t(spark, sf, "nation")
     out = safe_merge_left(
-        nat, _t(spark, sf, "region"), {"n_regionkey": "r_regionkey"},
+        nat, _t(spark, sf, "region"), {"n_regionkey": "r_regionkey"}, RunReport(),
         keep_cols=["r_regionkey", "r_name"],
     )
     return out.select("n_nationkey", "n_name", "r_name")
@@ -425,8 +425,8 @@ def u1(spark, sf):
 def v1(spark, sf):
     nat = _t(spark, sf, "nation")
     out = safe_merge_left(
-        nat, _t(spark, sf, "region"), {"n_regionkey": "r_regionkey"},
-        keep_cols=["r_regionkey", "r_name"], mode="count",
+        nat, _t(spark, sf, "region"), {"n_regionkey": "r_regionkey"}, RunReport(),
+        keep_cols=["r_regionkey", "r_name"],
     )
     return out.select("n_nationkey", "r_name")
 

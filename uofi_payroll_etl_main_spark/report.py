@@ -9,45 +9,69 @@ stdout.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["RunReport", "check_schema", "table_counts", "observe_counts", "check_expectations", "reconcile", "k_anonymity", "psi_report", "benford_report", "l_diversity", "chi_square_drift", "dp_counts", "dp_noise_sql"]
+__all__ = ["RunReport", "FanOutWarning", "check_schema", "table_counts", "observe_counts", "check_expectations", "reconcile", "k_anonymity", "psi_report", "benford_report", "l_diversity", "chi_square_drift", "dp_counts", "dp_noise_sql"]
+
+
+class FanOutWarning(UserWarning):
+    """Raised as a warning when a left join fans out the fact side (V1)."""
 
 
 @dataclass
 class RunReport:
-    """V3/V4 -- warnings + load/save metrics for one pipeline run."""
+    """V3/V4 -- warnings and observed facts for one pipeline run.
 
-    warnings: list[str] = field(default_factory=list)
-    loaded: dict[str, int] = field(default_factory=dict)
-    saved: dict[str, int] = field(default_factory=dict)
-    missing_inputs: list[str] = field(default_factory=list)
+    Watched fan-out counts (`watch_fan_out`) follow the `Observation.get`
+    contract: the first read of `warnings`, `fan_out` or `summary()` after
+    an action has consumed the watched frame records each check and, where
+    the count changed, a warning message plus a `FanOutWarning`.  A read
+    before any such action blocks until one finishes.
+    """
+
     missing_output_sources: dict[str, list[str]] = field(default_factory=dict)
     schema_ok: dict[str, bool] = field(default_factory=dict)
+    _warnings: list[str] = field(default_factory=list)
+    _fan_out: list[tuple[str, int, int]] = field(default_factory=list)
+    _watched: list[tuple[str, Observation, Observation]] = field(default_factory=list, repr=False)
 
     def warn(self, msg: str) -> None:
-        self.warnings.append(msg)
+        self._warnings.append(msg)
 
-    def record_load(self, name: str, df: DataFrame | None) -> None:
-        """Ref load summary :179-194 (missing inputs tracked, not fatal)."""
-        if df is None:
-            self.missing_inputs.append(name)
-        else:
-            self.loaded[name] = df.count()
+    def watch_fan_out(self, label: str, before: Observation, after: Observation) -> None:
+        """Ref safe_merge_left :226-232: compare the `observe_counts` row
+        counts taken before and after a join once an action has run."""
+        self._watched.append((label, before, after))
 
-    def record_save(self, name: str, n_rows: int) -> None:
-        """Ref save summary :423-426, :637-640."""
-        self.saved[name] = n_rows
+    def _read_watched(self) -> None:
+        while self._watched:
+            label, before, after = self._watched.pop(0)
+            n_before, n_after = before.get["n_rows"], after.get["n_rows"]
+            self._fan_out.append((label, n_before, n_after))
+            if n_before != n_after:
+                msg = f"{label} changed the row count: {n_before} -> {n_after}"
+                self.warn(msg)
+                warnings.warn(msg, FanOutWarning, stacklevel=3)
+
+    @property
+    def warnings(self) -> list[str]:
+        self._read_watched()
+        return self._warnings
+
+    @property
+    def fan_out(self) -> list[tuple[str, int, int]]:
+        """(join, rows before, rows after) for every watched join."""
+        self._read_watched()
+        return self._fan_out
 
     def summary(self) -> dict:
         return {
-            "loaded": self.loaded,
-            "saved": self.saved,
-            "missing_inputs": self.missing_inputs,
+            "fan_out": self.fan_out,
             "missing_output_sources": self.missing_output_sources,
             "schema_ok": self.schema_ok,
             "warnings": self.warnings,
@@ -143,18 +167,16 @@ def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFr
     return wide.select(F.explode(per_col).alias("p")).select("p.*")
 
 
-def observe_counts(df: DataFrame, name: str = "metrics"):
-    """V4 at scale: attach row/null-free metrics to the frame itself via
-    `Dataset.observe`, so the counts ride the NEXT action over the plan
-    instead of costing a second full scan (what `record_load`'s eager
-    .count() does -- fine for dims, wrong for a 100 TB fact).
+def observe_counts(df: DataFrame):
+    """V4 at scale: attach a row count to the frame itself via
+    `Dataset.observe`, so it rides the NEXT action over the plan instead
+    of costing a scan of its own.  The observation gets a random name:
+    one plan may not hold two observations of the same name.
 
-    Returns (df, observation); read `observation.get` AFTER an action
-    has consumed `df`.
+    Returns (df, observation); read `observation.get["n_rows"]` AFTER an
+    action has consumed `df` (it blocks until one has).
     """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
+    obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("n_rows")), obs
 
 
