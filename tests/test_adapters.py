@@ -35,6 +35,40 @@ def test_adapter_catalog_schema(spark, tmp_path):
     assert cat.count() == 1
 
 
+@pytest.mark.parametrize("via", ["build_catalog", "adapter_catalog"])
+def test_catalog_timestamps_are_instants_in_any_process_tz(spark, tmp_path, via):
+    """list_entries yields naive-UTC datetimes; the catalog frame must
+    read them as UTC instants even when the Python process runs in
+    another time zone (a file with mtime 1700000000 once read
+    1700021600 under America/Chicago)."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    from uofi_payroll_etl_main_spark.catalog import build_catalog
+
+    f = tmp_path / "extract.xlsx"
+    f.write_bytes(b"x")
+    os.utime(f, (1700000000, 1700000000))
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Chicago"
+    time.tzset()
+    try:
+        if via == "build_catalog":
+            cat = build_catalog(spark, str(tmp_path))
+        else:
+            cat = adapter_catalog(spark, LocalAdapter(str(tmp_path)))
+        got = cat.select(F.unix_timestamp("modified_at")).first()[0]
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert got == 1700000000
+
+
 def test_registry_constructs_by_name(tmp_path):
     a = get_adapter("local", root=str(tmp_path))
     assert isinstance(a, LocalAdapter)

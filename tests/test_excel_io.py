@@ -82,6 +82,16 @@ def test_write_excel_row_cap(spark, tmp_path, monkeypatch):
     assert not (tmp_path / "over.xlsx").exists()
 
 
+def test_read_excel_stdlib_plans_a_local_relation(roundtrip):
+    """The driver-parsed workbook reaches Spark as an Arrow-built
+    LocalRelation, not a pickled Python RDD that Python workers would
+    unpickle on every action (broadcasting a dim included)."""
+    *_, back = roundtrip
+    analyzed = back._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in analyzed
+    assert "LogicalRDD" not in analyzed
+
+
 def test_shared_strings_reader(spark, tmp_path):
     """Files written by Excel/openpyxl use sharedStrings + s-type cells;
     the reader must resolve them (hand-built minimal package)."""
@@ -160,9 +170,56 @@ class TestXlsxDataSource:
         (tmp_path / "w.xlsx").write_bytes(payload)
         register_xlsx_source(spark)
         with _pytest.raises(Exception, match="refusing"):
-            # schema inference parses the first workbook, so the drift
-            # already surfaces at load(); collect() for the general case
+            # schema() reads only the header row, so the drift surfaces
+            # when the partition parses its workbook, at the action
             spark.read.format("xlsx").load(str(tmp_path / "w.xlsx")).collect()
+
+    def test_wider_data_row_in_later_workbook_fails_loudly(self, spark, tmp_path):
+        import pytest as _pytest
+
+        from uofi_payroll_etl_main_spark.datasources import register_xlsx_source
+        from uofi_payroll_etl_main_spark.io import xlsx_payload
+
+        (tmp_path / "b0.xlsx").write_bytes(xlsx_payload(["a", "b"], [("1", "2")]))
+        (tmp_path / "b1.xlsx").write_bytes(
+            xlsx_payload(["a", "b"], [("3", "4"), ("5", "6", "SURPRISE")])
+        )
+        register_xlsx_source(spark)
+        df = spark.read.format("xlsx").load(str(tmp_path))
+        with _pytest.raises(Exception, match="refusing"):
+            df.collect()
+
+    def test_load_reads_only_the_header(self, spark, tmp_path):
+        # the first workbook's data rows drift, yet load() (schema
+        # inference) succeeds: it never parses past the header row
+        import pytest as _pytest
+
+        from uofi_payroll_etl_main_spark.datasources import register_xlsx_source
+        from uofi_payroll_etl_main_spark.io import xlsx_payload
+
+        (tmp_path / "b0.xlsx").write_bytes(
+            xlsx_payload(["a", "b"], [("1", "2"), ("3", "4", "SURPRISE")])
+        )
+        register_xlsx_source(spark)
+        df = spark.read.format("xlsx").load(str(tmp_path))
+        assert df.columns == ["a", "b"]
+        with _pytest.raises(Exception, match="refusing"):
+            df.collect()
+
+    def test_header_only_workbook_reads_empty(self, spark, tmp_path):
+        from uofi_payroll_etl_main_spark.datasources import register_xlsx_source
+        from uofi_payroll_etl_main_spark.io import xlsx_payload
+
+        path = tmp_path / "empty.xlsx"
+        path.write_bytes(xlsx_payload(["id", "name"], []))
+        register_xlsx_source(spark)
+        for df in (
+            read_excel_stdlib(spark, str(path)),
+            spark.read.format("xlsx").load(str(path)),
+        ):
+            assert df.columns == ["id", "name"]
+            assert [f.dataType.simpleString() for f in df.schema.fields] == ["string", "string"]
+            assert df.collect() == []
 
     def test_remote_uri_forms(self, spark, tmp_path):
         # file:// URIs route through the pyarrow layer (the same path a

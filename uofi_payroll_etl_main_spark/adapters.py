@@ -34,7 +34,7 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import CATALOG_SCHEMA, list_entries
+from .catalog import catalog_frame, list_entries
 
 __all__ = [
     "SourceAdapter",
@@ -192,4 +192,4 @@ register_adapter("box", BoxAdapter)
 
 def adapter_catalog(spark: SparkSession, adapter: SourceAdapter) -> DataFrame:
     """S2 over any adapter: its listing as the standard catalog frame."""
-    return spark.createDataFrame(list(adapter.list_entries()), CATALOG_SCHEMA)
+    return catalog_frame(spark, adapter.list_entries())

@@ -17,13 +17,15 @@ the DATA is read by distributed `spark.read`, only the listing is small.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-__all__ = ["CATALOG_SCHEMA", "list_entries", "build_catalog", "stamped_name"]
+from .io import local_frame
+
+__all__ = ["CATALOG_SCHEMA", "list_entries", "catalog_frame", "build_catalog", "stamped_name"]
 
 CATALOG_SCHEMA = T.StructType(
     [
@@ -67,10 +69,18 @@ def list_entries(root: str) -> Iterator[dict]:
             }
 
 
+def catalog_frame(spark: SparkSession, entries: Iterable[dict]) -> DataFrame:
+    """Catalog rows (dicts keyed by CATALOG_SCHEMA's names) as the catalog
+    DataFrame, an Arrow-built local_frame: a naive timestamp is a UTC
+    instant (what list_entries yields) and an aware one keeps its
+    instant, whatever the process time zone."""
+    names = CATALOG_SCHEMA.names
+    return local_frame(spark, [tuple(e.get(n) for n in names) for e in entries], CATALOG_SCHEMA)
+
+
 def build_catalog(spark: SparkSession, root: str) -> DataFrame:
     """S2 -- catalog DataFrame for a directory tree (ref :62, :105)."""
-    rows = list(list_entries(root))
-    return spark.createDataFrame(rows, CATALOG_SCHEMA)
+    return catalog_frame(spark, list_entries(root))
 
 
 def stamped_name(prefix: str, ext: str, now: datetime | None = None) -> str:

@@ -21,10 +21,17 @@ workbook is not possible for xlsx (a zip container must be read
 whole), so file granularity is the correct partitioning unit, same as
 every production Excel connector.
 
-Schema: all-string columns taken from the FIRST file's header row (the
-reference's workbooks share one layout; a mismatched later file
-surfaces as a loud per-partition error, never silent column drift --
-each partition re-checks its own header against the planned schema).
+Schema: all-string columns taken from the FIRST file's header row
+alone: `schema()` stops reading that workbook after its first row, so
+a `load` never parses data rows on the driver.  The reference's
+workbooks share one layout; a mismatched later file surfaces as a loud
+per-partition error, never silent column drift -- each partition
+re-checks its own header against the planned schema, and parse_xlsx
+refuses a data row with a value past the header (both at the action).
+
+Each partition yields its workbook as one `pyarrow.RecordBatch`, which
+PySpark hands to the JVM as is, instead of per-row tuples that a
+Python worker would convert cell by cell.
 """
 
 from __future__ import annotations
@@ -117,9 +124,14 @@ class _XlsxReader(DataSourceReader):
         # executor-side: parse this partition's whole workbook with the
         # same stdlib kernel the driver reader uses; bytes come through
         # the pyarrow layer so any URI the writer can reach, the reader
-        # can too (no JVM gateway in a Python worker)
+        # can too (no JVM gateway in a Python worker).  parse_xlsx
+        # returns rows exactly as wide as the header and raises on a
+        # non-empty cell past it, so the workbook goes out as one Arrow
+        # batch, which PySpark passes through without per-cell conversion
+        import pyarrow as pa
+
         from uofi_payroll_etl_main_spark import fs as _fs
-        from uofi_payroll_etl_main_spark.io import parse_xlsx
+        from uofi_payroll_etl_main_spark.io import arrow_batch, parse_xlsx
 
         with _fs.open_read(partition.file_path) as f:
             header, rows = parse_xlsx(f, partition.sheet)
@@ -129,18 +141,7 @@ class _XlsxReader(DataSourceReader):
                 f"planned schema {self.schema_names} (schema comes from the "
                 "first file; fix or exclude the divergent workbook)"
             )
-        width = len(self.schema_names)
-        for i, r in enumerate(rows):
-            if len(r) > width:
-                # a data row wider than the planned schema is column
-                # drift -- loud per-partition error, never silent cell
-                # loss (same contract as the header check above)
-                raise ValueError(
-                    f"{partition.file_path}: data row {i} has {len(r)} cells "
-                    f"but the planned schema has {width} columns; refusing "
-                    "to drop trailing cells"
-                )
-            yield tuple(r) + (None,) * (width - len(r))
+        yield arrow_batch(rows, pa.schema([(h, pa.string()) for h in header]))
 
 
 class XlsxDataSource(DataSource):
@@ -156,10 +157,14 @@ class XlsxDataSource(DataSource):
             raise ValueError("xlsx source requires a path (load(...))")
         sheet = int(self.options.get("sheet", 0))
         from uofi_payroll_etl_main_spark import fs as _fs
-        from uofi_payroll_etl_main_spark.io import parse_xlsx
+        from uofi_payroll_etl_main_spark.io import xlsx_rows
 
+        # the header is the first item xlsx_rows yields; closing the
+        # generator there leaves the data rows unread
         with _fs.open_read(_expand_paths(path)[0]) as f:
-            header, _rows = parse_xlsx(f, sheet)
+            rows = xlsx_rows(f, sheet)
+            header = next(rows)
+            rows.close()
         return StructType([StructField(h, StringType()) for h in header])
 
     def reader(self, schema: StructType) -> DataSourceReader:

@@ -12,7 +12,7 @@ executor-side, one partition per workbook, for folder-scale Excel.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
 import glob
 import json
@@ -178,72 +178,134 @@ def _xlsx_escape(s: str) -> str:
     )
 
 
-def parse_xlsx(source, sheet: int = 0) -> tuple[list[str], list[tuple]]:
-    """xlsx parse kernel (zipfile + xml.etree only): (header, rows) of
-    all-string cells, first sheet row as header.  Supports inline
-    strings, shared strings, and numeric cells (numbers surface as
-    their literal text, the string-typed pipeline contract).  `source`
-    is a path or file-like; runs identically on the driver
-    (read_excel_stdlib) and on executors (the `xlsx` Python Data
-    Source in datasources.py)."""
-    import io as _io
+def xlsx_rows(source, sheet: int = 0) -> Iterator:
+    """xlsx parse kernel (zipfile + xml.etree only), streamed: yields the
+    header (a list of column names, `col_<i>` for a blank cell) and then
+    each data row as a tuple of all-string cells exactly as wide as the
+    header.  Supports inline strings, shared strings, and numeric cells
+    (numbers surface as their literal text, the string-typed pipeline
+    contract).  `source` is a path or seekable file-like.
+
+    Shared strings are parsed in full up front; the worksheet itself is
+    walked row by row with ``ET.iterparse``, so a caller that only needs
+    the header (the `xlsx` source's schema()) stops after the first row
+    and never inflates or parses the data rows."""
     import zipfile
     import xml.etree.ElementTree as ET
 
+    row_tag, c_tag, v_tag, is_tag, t_tag = (
+        f"{_XLSX_NS}{t}" for t in ("row", "c", "v", "is", "t")
+    )
     with zipfile.ZipFile(source) as zf:
+        names = zf.namelist()
         shared: list[str] = []
-        if "xl/sharedStrings.xml" in zf.namelist():
-            root = ET.parse(_io.BytesIO(zf.read("xl/sharedStrings.xml"))).getroot()
-            for si in root.findall(f"{_XLSX_NS}si"):
-                shared.append("".join(t.text or "" for t in si.iter(f"{_XLSX_NS}t")))
+        if "xl/sharedStrings.xml" in names:
+            root = ET.fromstring(zf.read("xl/sharedStrings.xml"))
+            for si in root.iterfind(f"{_XLSX_NS}si"):
+                shared.append("".join(t.text or "" for t in si.iter(t_tag)))
         sheet_names = sorted(
-            n for n in zf.namelist()
+            n for n in names
             if n.startswith("xl/worksheets/sheet") and n.endswith(".xml")
         )
-        root = ET.parse(_io.BytesIO(zf.read(sheet_names[sheet]))).getroot()
-        rows: list[list[str | None]] = []
-        for row_el in root.iter(f"{_XLSX_NS}row"):
-            cells: dict[int, str | None] = {}
-            for c in row_el.findall(f"{_XLSX_NS}c"):
-                ci = _col_index(c.get("r", ""))
-                ctype = c.get("t", "n")
-                if ctype == "inlineStr":
-                    is_el = c.find(f"{_XLSX_NS}is")
-                    v = "".join(t.text or "" for t in is_el.iter(f"{_XLSX_NS}t")) if is_el is not None else None
-                else:
-                    v_el = c.find(f"{_XLSX_NS}v")
-                    v = v_el.text if v_el is not None else None
-                    if ctype == "s" and v is not None:
-                        v = shared[int(v)]
-                cells[ci] = v
-            width = max(cells) + 1 if cells else 0
-            rows.append([cells.get(i) for i in range(width)])
-    if not rows:
+        width = None
+        n_data = 0
+        col_of: dict[str, int] = {}  # column letters -> index, one parse per column
+        with zf.open(sheet_names[sheet]) as f:
+            for _, row_el in ET.iterparse(f):
+                if row_el.tag != row_tag:
+                    continue
+                cells: dict[int, str | None] = {}
+                for c in row_el.iterfind(c_tag):
+                    ctype = c.get("t", "n")
+                    if ctype == "inlineStr":
+                        is_el = c.find(is_tag)
+                        v = "".join(t.text or "" for t in is_el.iter(t_tag)) if is_el is not None else None
+                    else:
+                        v_el = c.find(v_tag)
+                        v = v_el.text if v_el is not None else None
+                        if ctype == "s" and v is not None:
+                            v = shared[int(v)]
+                    letters = c.get("r", "").rstrip("0123456789")
+                    ci = col_of.get(letters)
+                    if ci is None:
+                        ci = col_of[letters] = _col_index(letters)
+                    cells[ci] = v
+                row_el.clear()
+                if width is None:  # the first row is the header
+                    width = max(cells, default=-1) + 1
+                    yield [h if (h := cells.get(i)) is not None else f"col_{i}" for i in range(width)]
+                    continue
+                if max(cells, default=-1) >= width and any(
+                    v is not None for ci, v in cells.items() if ci >= width
+                ):
+                    # a VALUE past the header width is column drift -- loud
+                    # error, never silent cell loss.  (Styled-but-empty
+                    # trailing cells, which real spreadsheets carry
+                    # routinely, pad away.)
+                    raise ValueError(
+                        f"data row {n_data} has non-empty cells past the {width}-column "
+                        "header; refusing to drop trailing cells (column drift)"
+                    )
+                yield tuple([cells.get(i) for i in range(width)])
+                n_data += 1
+    if width is None:
         raise ValueError(f"empty worksheet in {source!r}")
-    header = [h if h is not None else f"col_{i}" for i, h in enumerate(rows[0])]
-    width = len(header)
-    data = []
-    for i, r in enumerate(rows[1:]):
-        if len(r) > width and any(v is not None for v in r[width:]):
-            # a VALUE past the header width is column drift -- loud
-            # error, never silent cell loss.  (Styled-but-empty trailing
-            # cells, which real spreadsheets carry routinely, pad away.)
-            raise ValueError(
-                f"data row {i} has non-empty cells past the {width}-column "
-                "header; refusing to drop trailing cells (column drift)"
-            )
-        data.append(tuple((r + [None] * width)[:width]))
-    return header, data
+
+
+def parse_xlsx(source, sheet: int = 0) -> tuple[list[str], list[tuple]]:
+    """(header, rows) of one worksheet, read in full through the
+    xlsx_rows kernel.  Runs identically on the driver
+    (read_excel_stdlib) and on executors (the `xlsx` Python Data Source
+    in datasources.py)."""
+    rows = xlsx_rows(source, sheet)
+    header = next(rows)
+    return header, list(rows)
+
+
+def arrow_batch(rows: Sequence[tuple], arrow_schema):
+    """Row tuples in `arrow_schema` order as one `pyarrow.RecordBatch`;
+    a naive datetime in a UTC timestamp column means UTC."""
+    import datetime as _dt
+
+    import pyarrow as pa
+
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    arrays = []
+    for col, f in zip(columns, arrow_schema):
+        if pa.types.is_timestamp(f.type) and f.type.tz:
+            # given the type, pyarrow keeps an aware datetime's wall clock
+            # and drops its offset, so shift to UTC first
+            col = [v.astimezone(_dt.timezone.utc) if v is not None and v.tzinfo else v for v in col]
+        arrays.append(pa.array(col, type=f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType | str) -> DataFrame:
+    """A small driver-held table (`rows` are tuples in `schema` order) as
+    a DataFrame, handed to Spark as one Arrow table.  The plan leaf is a
+    LocalRelation the optimizer folds projections and filters into, and
+    broadcasting it is a JVM-only job; a list of rows would instead
+    become a pickled Python RDD that Python workers must unpickle on
+    every action.  Timestamps travel as UTC instants, so a naive
+    datetime means UTC (the list path read it as process-local time)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    batch = arrow_batch(rows, to_arrow_schema(schema))
+    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)
 
 
 def read_excel_stdlib(spark: SparkSession, path: str, sheet: int = 0) -> DataFrame:
     """S3 -- driver-side xlsx scan over one workbook (parse_xlsx
-    kernel).  For a FOLDER of workbooks, the registered `xlsx` Python
+    kernel), returned as an all-string local_frame: an Arrow-built
+    LocalRelation, so joining it as a broadcast dim costs no Python
+    worker.  For a FOLDER of workbooks, the registered `xlsx` Python
     Data Source (datasources.py) runs the same kernel executor-side,
     one partition per file."""
     header, data = parse_xlsx(path, sheet)
-    schema = ", ".join(f"`{h}` string" for h in header)
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, T.StructType([T.StructField(h, T.StringType()) for h in header]))
 
 
 def read_excel(spark: SparkSession, path: str, sheet_name=0) -> DataFrame:

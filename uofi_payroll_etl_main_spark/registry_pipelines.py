@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import INGEST_ORDER_COL
-from .io import load_table
+from .io import load_table, local_frame
 from .pipelines.cpa import run_cpa
 from .pipelines.pua import run_pua
 
@@ -96,11 +96,13 @@ def _pua_inputs(spark: SparkSession, sf_dir: str):
         F.concat(_s(nk % 7), F.lit("-"), _s(nk % 10)).alias("TS-Org Dept Code"),
         F.concat(F.lit("DeptTitle-"), _s(nk)).alias("TS-Org Dept Title"),
     )
-    overtime = spark.createDataFrame(
+    overtime = local_frame(
+        spark,
         [("EA", "Non-Exempt"), ("EB", "Exempt")],
         "`Job Eclass` string, `Overtime FLSA` string",
     )
-    te_m = spark.createDataFrame(
+    te_m = local_frame(
+        spark,
         [
             ("a", "W", "Web Time"),
             ("b", "W", "Web Time"),
@@ -303,7 +305,8 @@ def _cpa_inputs(spark: SparkSession, sf_dir: str):
         F.concat(_s(nk), F.lit("-602")).alias("TS-Org Dept Code"),
         F.concat(F.lit("Dept "), F.col("n_name")).alias("TS-Org Dept Title"),
     )
-    overtime = spark.createDataFrame(
+    overtime = local_frame(
+        spark,
         [
             ("EA", "BW", "Non-Exempt", "Academic"),
             ("EA", "MN", "NE-Monthly", "Academic-M"),
