@@ -375,6 +375,12 @@ class TestKCore:
                for r in entrymod.queries()["g8_kcore"](spark, sf_dir).collect()}
         assert got == expect and len(got) > 0
 
+    def test_empty_edge_frame(self, spark):
+        from uofi_payroll_etl_main_spark.graph import k_core
+
+        df = spark.createDataFrame([], "src long, dst long")
+        assert k_core(df, k=2).collect() == []
+
 
 class TestPersonalizedPageRank:
     def test_seed_restart_properties(self, spark):
@@ -697,3 +703,23 @@ def test_scc_raises_when_caps_exhausted(spark):
         for r in strongly_connected_components(cyc).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
+
+
+def test_scc_empty_self_loops_and_chain(spark):
+    """strongly_connected_components on the fixpoint's edge cases: an
+    empty edge frame (the observed sums are NULL), self-loops only
+    (every node its own SCC, settled in the first peel), and a chain
+    that settles one node per peel, so the observed `open` count has to
+    carry the loop across four peels."""
+    from uofi_payroll_etl_main_spark.graph import strongly_connected_components
+
+    def scc(pairs):
+        df = spark.createDataFrame(pairs, "src long, dst long")
+        return {
+            r["node"]: r["scc_id"]
+            for r in strongly_connected_components(df).collect()
+        }
+
+    assert scc([]) == {}
+    assert scc([(1, 1), (2, 2), (3, 3)]) == {1: 1, 2: 2, 3: 3}
+    assert scc([(1, 2), (2, 3), (3, 4)]) == {1: 1, 2: 2, 3: 3, 4: 4}

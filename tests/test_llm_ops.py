@@ -1415,6 +1415,27 @@ def test_kmeans_int_matches_python_replica(spark):
         assert len({want[vid][0] for vid in range(60) if vid % 3 == b}) == 1
 
 
+def test_kmeans_int_tie_goes_to_smaller_cluster_id(spark):
+    """kmeans_int: a vector equidistant from two centroids is assigned
+    to the smaller cluster_id, and each seed centroid to its own index
+    (the argmin reads cluster ids off the centroid matrix's index)."""
+    import hashlib
+
+    from uofi_payroll_etl_main_spark.llm.similarity import kmeans_int
+
+    # the two seed centroids are the md5-first ids; give them the unit
+    # axes and the third row the diagonal, which quantizes to (127, 127)
+    # at squared distance 127^2 from both
+    ids = sorted(range(3), key=lambda v: hashlib.md5(f"{v}:42".encode()).hexdigest())
+    vecs = {ids[0]: [1.0, 0.0], ids[1]: [0.0, 1.0], ids[2]: [1.0, 1.0]}
+    df = spark.createDataFrame(list(vecs.items()), "vec_id long, embedding array<float>")
+    got = {
+        r["vec_id"]: (r["cluster_id"], r["dist2"])
+        for r in kmeans_int(df, k=2, n_iter=0).collect()
+    }
+    assert got == {ids[0]: (0, 0), ids[1]: (1, 0), ids[2]: (0, 127 * 127)}
+
+
 def test_semantic_dedup_int_planted_duplicates(spark):
     """semantic_dedup_int: planted near-identical vectors collapse to
     one kept exemplar; well-separated vectors all survive; every

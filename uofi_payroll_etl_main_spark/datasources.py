@@ -134,7 +134,10 @@ class _XlsxReader(DataSourceReader):
         from uofi_payroll_etl_main_spark.io import arrow_batch, parse_xlsx
 
         with _fs.open_read(partition.file_path) as f:
-            header, rows = parse_xlsx(f, partition.sheet)
+            try:
+                header, rows = parse_xlsx(f, partition.sheet)
+            except ValueError as exc:  # name the workbook that drifted
+                raise ValueError(f"{partition.file_path}: {exc}") from exc
         if header != self.schema_names:
             raise ValueError(
                 f"{partition.file_path}: header {header} does not match the "

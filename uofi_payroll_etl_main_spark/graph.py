@@ -1,8 +1,9 @@
 """Graph analytics over relationship edges (entity-resolution /
 duplicate-cluster graphs, supplier-customer networks).
 
-Connected components (duplicate-cluster resolution) lives in
-`llm/dedup.py`; this module holds rank-style iterative algorithms.
+Rank-style iterations (PageRank, HITS, label propagation) and the
+fixpoint algorithms (connected components by star contraction, k-core,
+strongly connected components, BFS and betweenness supersteps).
 
 PageRank here is the standard simplified power iteration: a fixed
 number of synchronous iterations, dangling mass not redistributed
@@ -16,19 +17,34 @@ Scale notes (billions of edges):
   * Each iteration is one shuffle: edges pre-joined with out-degree
     once (reused across iterations), then ranks join on src (shuffle
     bounded by node count, with AQE handling hub skew) and aggregate
-    on dst with map-side combine.
-  * Nothing is collected to the driver except the node COUNT (a scalar
-    action, once).
-  * For many iterations, persist/checkpoint the rank frame between
-    steps to cut lineage; at 3 iterations lineage depth is fine.
+    on dst with map-side combine.  PageRank collects the node COUNT
+    (once) and, with `tol`, one max-delta scalar per iteration.
+  * A fixpoint superstep is ONE eager action: `_superstep` checkpoints
+    the round's frame (truncating its lineage) and observes the
+    round's convergence counts on that same action, so only those few
+    scalars reach the driver and no probe runs an action of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 __all__ = ["pagerank", "connected_components", "triangle_count", "degree_stats", "label_propagation", "bfs_hops", "shortest_paths", "k_core", "personalized_pagerank", "adamic_adar", "modularity", "hits", "betweenness_approx", "strongly_connected_components", "bipartite_projection"]
+
+
+def _superstep(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Run one superstep of a fixpoint loop as a single eager action:
+    `localCheckpoint` `df` (cutting its lineage) with `metrics`
+    (name=aggregate Column) attached by `DataFrame.observe`, so the
+    loop's convergence test rides the checkpoint instead of costing a
+    collect of its own.  Returns (checkpoint, {name: value}); a sum over
+    no rows reads None."""
+    obs = Observation()
+    cp = df.observe(obs, *[c.alias(n) for n, c in metrics.items()]).localCheckpoint(eager=True)
+    return cp, obs.get
 
 
 def pagerank(
@@ -159,8 +175,9 @@ def connected_components(
     can be thousands.  Star contraction converges in O(log n) rounds on
     any topology, each round two (groupBy + join) shuffles over the
     current edge set, which strictly shrinks toward one star per
-    component.  Nothing but a per-round scalar count ever reaches the
-    driver; localCheckpoint truncates the per-round lineage.
+    component.  Each round is one `_superstep`: its checkpoint
+    truncates the lineage and observes the round's edge-set signature,
+    the only thing that reaches the driver.
 
     Node ids must be orderable (the component id is the min); ids of
     any single orderable Spark type work.
@@ -216,26 +233,20 @@ def connected_components(
             .distinct()
         )
 
-    def _signature(ed: DataFrame) -> tuple:
-        # Order-independent set signature: (count, sum of 64-bit edge
-        # hashes).  Both edge sets are canonical (a<b) and distinct, so
-        # equal signatures mean equal sets up to a 2^-64 collision --
-        # one cheap aggregate per round instead of a full-outer
-        # symmetric-difference join (which re-shuffles both edge sets).
-        row = ed.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: a long sum of 64-bit hashes overflows under
-            # the driver's ANSI session
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    e = e0.localCheckpoint(eager=True)
-    sig = _signature(e)
+    # Order-independent set signature: (count, sum of 64-bit edge
+    # hashes).  Both edge sets are canonical (a<b) and distinct, so
+    # equal signatures mean equal sets up to a 2^-64 collision -- two
+    # aggregates observed on the round's checkpoint instead of a
+    # full-outer symmetric-difference join (which re-shuffles both edge
+    # sets).  The hash sum is decimal: a long sum of 64-bit hashes
+    # overflows under the driver's ANSI session.
+    signature = {
+        "n": F.count(F.lit(1)),
+        "h": F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
+    }
+    e, sig = _superstep(e0, **signature)
     for _ in range(max_iterations):
-        e2 = _star(_star(e, large=True), large=False).localCheckpoint(eager=True)
-        sig2 = _signature(e2)
-        e = e2
+        e, sig2 = _superstep(_star(_star(e, large=True), large=False), **signature)
         if sig2 == sig:
             break
         sig = sig2
@@ -504,33 +515,33 @@ def k_core(
     The community/cohesion primitive behind spam-farm detection and
     dense-cluster mining on link graphs.  Scale shape: each round is
     one degree aggregation (map-side combined) + one semi join of the
-    edge set against survivors -- edge-partitioned work, no collect
-    except the scalar survivor count that detects the fixpoint.
-    Lineage truncates per round (localCheckpoint, same discipline as
-    pagerank/bfs); rounds are data-bounded (each removes >= 1 node) and
-    capped by `max_iter` as a runaway stop.
+    edge set against survivors -- edge-partitioned work, one
+    `_superstep` whose checkpoint observes the surviving edge count.
+    Every node of the symmetrized edge set has an edge in it, so a
+    round that removes no node removes no edge: an unchanged edge count
+    IS the fixpoint.  Rounds are data-bounded (each removes >= 1 node)
+    and capped by `max_iter` as a runaway stop.
     """
+    n_edges = F.count(F.lit(1))
     # undirected simple graph: symmetrize + dedup, drop self-loops
-    und = (
+    und, m_prev = _superstep(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=n_edges,
     )
-    n_prev = und.select("a").distinct().count()
     for _ in range(int(max_iter)):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
         survivors = deg.filter(F.col("d") >= int(k)).select("a")
-        n_now = survivors.count()
-        if n_now == n_prev:
-            break
-        und = (
+        und, m = _superstep(
             und.join(survivors, "a", "left_semi")
-            .join(survivors.select(F.col("a").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=True)
+            .join(survivors.select(F.col("a").alias("b")), "b", "left_semi"),
+            n=n_edges,
         )
-        n_prev = n_now
+        if m == m_prev:
+            break
+        m_prev = m
     return (
         und.groupBy(F.col("a").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
@@ -847,8 +858,9 @@ def betweenness_approx(
     backward: dependencies fold level-by-level in reverse --
     delta(v) = sum over successors w of sigma_v/sigma_w * (1+delta_w)
     -- one join of level h against level h+1 through the edge list per
-    step.  Per-level frames persist, so lineage is O(1) per superstep;
-    driver traffic is zero (isEmpty probes only).
+    step.  Per-level frames are checkpointed, so lineage is O(1) per
+    superstep; each forward level is one `_superstep` whose observed
+    row count (the only driver traffic) ends the BFS.
 
     Endpoints are excluded per the classic definition; sources
     contribute no dependency to themselves.  Returns (node,
@@ -891,15 +903,15 @@ def betweenness_approx(
             recent = levels[-1].select("s", "node")
             if len(levels) > 1:
                 recent = recent.union(levels[-2].select("s", "node"))
-        nxt = (
+        nxt, m = _superstep(
             frontier.join(e, frontier["node"] == e["a"])
             .select("s", F.col("b").alias("node"), "sigma")
             .join(recent, ["s", "node"], "left_anti")
             .groupBy("s", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint()
+            .agg(F.sum("sigma").alias("sigma")),
+            n=F.count(F.lit(1)),
         )
-        if nxt.isEmpty():
+        if not m["n"]:
             break
         levels.append(nxt)
 
@@ -975,14 +987,19 @@ def strongly_connected_components(
     Scale shape: every step is an equi-join/groupBy on node ids over
     the shrinking edge set -- no closure materialization (the oracle's
     reachability-pair blowup is exactly what this avoids); the two
-    directions propagate SIMULTANEOUSLY in one label frame, so each
-    synchronous round costs two shuffle pushes but only ONE
-    materialization + one scalar change-count collect, and the loop
-    length is max(fwd diameter, bwd diameter) rather than their sum.
-    localCheckpoint truncates the per-round lineage.  Rounds are
-    bounded by the unassigned subgraph's diameter per propagation,
-    peels by the SCC condensation depth; both driver-bounded via
-    max_* args.
+    directions propagate SIMULTANEOUSLY in one label frame, so the
+    loop length is max(fwd diameter, bwd diameter) rather than their
+    sum.  A round is ONE groupBy("node") over the nodes' own labels and
+    the labels pushed along and against the edges, checkpointed by one
+    `_superstep` that observes `changed` (nodes whose label moved) and
+    `open` (nodes with flabel != blabel, i.e. not settled at the
+    fixpoint).  A peel ends when a round changes nothing; its `open`
+    says whether another peel is needed, and only then is the edge set
+    restricted to the still-open nodes (one checkpoint).  Settled nodes
+    are filters over each peel's last checkpoint, unioned once at the
+    end.  Rounds are bounded by the unassigned subgraph's diameter per
+    propagation, peels by the SCC condensation depth; both
+    driver-bounded via max_* args.
 
     Correctness guard: fwd/bwd labels are only uniform across an SCC
     AT FIXPOINT, so stopping label propagation early can settle members
@@ -997,61 +1014,53 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nodes = (
+
+    def _round(lab: DataFrame, ed: DataFrame) -> tuple[DataFrame, dict]:
+        # one synchronous step of min-label propagation along (flabel)
+        # and against (blabel) the edges; every node keeps its own row,
+        # whose labels also ride as __f0/__b0 to tell what changed (the
+        # pushed rows carry NULL in the columns they lack)
+        own = lab.select(
+            "node", "flabel", "blabel",
+            F.col("flabel").alias("__f0"), F.col("blabel").alias("__b0"),
+        )
+        fwd = ed.join(lab.select(F.col("node").alias("s"), "flabel"), "s").select(
+            F.col("d").alias("node"), "flabel"
+        )
+        bwd = ed.join(lab.select(F.col("node").alias("d"), "blabel"), "d").select(
+            F.col("s").alias("node"), "blabel"
+        )
+        new = (
+            own.unionByName(fwd, allowMissingColumns=True)
+            .unionByName(bwd, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(
+                F.min("flabel").alias("flabel"),
+                F.min("blabel").alias("blabel"),
+                (
+                    (F.min("flabel") < F.min("__f0")) | (F.min("blabel") < F.min("__b0"))
+                ).cast("int").alias("__chg"),
+            )
+        )
+        cp, m = _superstep(
+            new,
+            changed=F.sum("__chg"),
+            open=F.sum((F.col("flabel") != F.col("blabel")).cast("int")),
+        )
+        return cp.drop("__chg"), m
+
+    active = (
         e0.select(F.col("s").alias("node"))
         .union(e0.select(F.col("d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    spark = edges.sparkSession
-    node_type = dict(nodes.dtypes)["node"]
-    assigned = spark.createDataFrame(
-        [], f"node {node_type}, scc_id {node_type}"
-    )
-
-    def _min_reach_both(active_nodes: DataFrame, ed: DataFrame) -> DataFrame:
-        # simultaneous fixpoint min-label propagation along (flabel)
-        # and against (blabel) the edges; returns (node, flabel, blabel)
-        lab = active_nodes.select(
-            "node",
-            F.col("node").alias("flabel"),
-            F.col("node").alias("blabel"),
-        )
+    ed = e0
+    settled = []
+    for _ in range(max_peels):
+        lab = active.select("node", F.col("node").alias("flabel"), F.col("node").alias("blabel"))
         for _ in range(max_prop_rounds):
-            fpush = (
-                ed.join(
-                    lab.select("node", "flabel"), ed["s"] == F.col("node")
-                )
-                .groupBy(ed["d"].alias("node"))
-                .agg(F.min("flabel").alias("__fin"))
-            )
-            bpush = (
-                ed.join(
-                    lab.select("node", "blabel"), ed["d"] == F.col("node")
-                )
-                .groupBy(ed["s"].alias("node"))
-                .agg(F.min("blabel").alias("__bin"))
-            )
-            new = (
-                lab.join(fpush, "node", "left")
-                .join(bpush, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("flabel"), F.coalesce("__fin", F.col("flabel"))
-                    ).alias("flabel"),
-                    F.least(
-                        F.col("blabel"), F.coalesce("__bin", F.col("blabel"))
-                    ).alias("blabel"),
-                    (
-                        (F.coalesce("__fin", F.col("flabel")) < F.col("flabel"))
-                        | (F.coalesce("__bin", F.col("blabel")) < F.col("blabel"))
-                    ).cast("int").alias("__chg"),
-                )
-            ).localCheckpoint(eager=True)
-            changed = new.agg(F.sum("__chg")).collect()[0][0] or 0
-            lab = new.drop("__chg")
-            if changed == 0:
+            lab, m = _round(lab, ed)
+            if not m["changed"]:
                 break
         else:
             raise RuntimeError(
@@ -1061,37 +1070,26 @@ def strongly_connected_components(
                 f"assign wrong scc_ids.  Raise max_prop_rounds (needs >= the "
                 f"unassigned subgraph's diameter)."
             )
-        return lab
-
-    active = nodes
-    ed = e0
-    for _ in range(max_peels):
-        if active.isEmpty():
+        settled.append(
+            lab.filter(F.col("flabel") == F.col("blabel"))
+            .select("node", F.col("flabel").alias("scc_id"))
+        )
+        if not m["open"]:
             break
-        both = _min_reach_both(active, ed)
-        settled = both.filter(F.col("flabel") == F.col("blabel")).select(
-            "node", F.col("flabel").alias("scc_id")
-        )
-        assigned = assigned.unionByName(settled).localCheckpoint(eager=True)
-        active = (
-            both.filter(F.col("flabel") != F.col("blabel"))
-            .select("node")
-            .localCheckpoint(eager=True)
-        )
+        active = lab.filter(F.col("flabel") != F.col("blabel")).select("node")
         ed = (
             ed.join(active.withColumnRenamed("node", "s"), "s", "left_semi")
             .join(active.withColumnRenamed("node", "d"), "d", "left_semi")
             .localCheckpoint(eager=True)
         )
     else:
-        if not active.isEmpty():
-            raise RuntimeError(
-                f"strongly_connected_components: {active.count()} nodes "
-                f"still unassigned after max_peels={max_peels}; returning "
-                f"would silently drop them.  Raise max_peels (needs >= the "
-                f"SCC condensation depth)."
-            )
-    return assigned
+        raise RuntimeError(
+            f"strongly_connected_components: {m['open']} nodes "
+            f"still unassigned after max_peels={max_peels}; returning "
+            f"would silently drop them.  Raise max_peels (needs >= the "
+            f"SCC condensation depth)."
+        )
+    return reduce(DataFrame.unionByName, settled)
 
 
 def bipartite_projection(

@@ -1565,9 +1565,10 @@ def kmeans_int(
     quantity is an integer, so the DuckDB oracle replays the unrolled
     iterations bit-for-bit -- no float drift, no ordering sensitivity.
 
-    Scale shape identical to kmeans_assign: the corpus is scanned once
-    per iteration against a BROADCAST k x dim centroid table; the
-    driver sees only the k x dim centroid cells per iteration.
+    Scale shape: the corpus is scanned once per iteration against the
+    k x dim centroids held as one literal matrix in the plan (no join,
+    no shuffle for the argmin); the driver sees only the k x dim
+    centroid cells per iteration.
     Returns (vec_id, cluster_id, dist2) under the FINAL centroids.
     """
     q = quantize_embeddings(corpus, vec_col).select(
@@ -1588,35 +1589,29 @@ def kmeans_int(
             f"kmeans_int: corpus has only {len(cent_rows)} rows but k={k}; "
             f"need at least k vectors to seed the centroids"
         )
-    cents = [(i, [int(x) for x in r["__qv"]]) for i, r in enumerate(cent_rows)]
-    dim = len(cents[0][1])
+    cents = [[int(x) for x in r["__qv"]] for r in cent_rows]  # index = cluster_id
+    dim = len(cents[0])
 
     def _assign(centroids):
-        # the k centroids are literals, so the argmin needs NO join and
-        # NO shuffle: per row, an array of (dist2, cluster_id) structs
-        # -- dist2 the identical zip_with/aggregate integer squared-L2
-        # as before -- and array_min's lexicographic struct ordering IS
-        # the old window's orderBy("dist2", "cluster_id") rn=1 pick.
-        # The previous crossJoin(broadcast) + row_number shape paid a
-        # full exchange of the corpus per iteration (n_iter + 1 of
-        # them) just to rank k=8 rows per vector.
-        def _d2(vec):
-            cv = F.array(*[F.lit(int(x)) for x in vec])
-            return F.aggregate(
-                F.zip_with("__qv", cv, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-
+        # Constant-size plan: the k centroids are ONE literal k x dim
+        # matrix (one array literal per centroid), and a single
+        # `transform` over it yields per row the (dist2, cluster_id)
+        # structs -- dist2 the integer squared-L2 by zip_with/aggregate,
+        # cluster_id the matrix index.
+        # array_min's lexicographic struct order picks the nearest
+        # centroid, ties to the smaller id.  No join, no shuffle.
+        cmat = F.array(*[F.lit(np.asarray(vec, np.int64)) for vec in centroids])
         best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        _d2(vec).alias("dist2"),
-                        F.lit(int(cid)).cast("long").alias("cluster_id"),
-                    )
-                    for cid, vec in centroids
-                ]
+            F.transform(
+                cmat,
+                lambda c, i: F.struct(
+                    F.aggregate(
+                        F.zip_with("__qv", c, lambda a, b: (a - b) * (a - b)),
+                        F.lit(0).cast("long"),
+                        lambda acc, x: acc + x,
+                    ).alias("dist2"),
+                    i.cast("long").alias("cluster_id"),
+                ),
             )
         )
         return q.withColumn("__b", best).select(
@@ -1642,8 +1637,8 @@ def kmeans_int(
         for r in comp:
             upd.setdefault(int(r["cluster_id"]), {})[int(r["__i"])] = int(r["__c"])
         cents = [
-            (cid, [upd[cid][i] for i in range(dim)] if cid in upd else old)
-            for cid, old in cents
+            [upd[cid][i] for i in range(dim)] if cid in upd else old
+            for cid, old in enumerate(cents)
         ]
 
     return _assign(cents).select(
