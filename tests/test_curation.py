@@ -125,8 +125,24 @@ def test_cross_dedup_drops_seen_fingerprints(spark):
     )
     kept = [r.doc_id for r in C.cross_dedup(corpus, seen).collect()]
     assert kept == [11]
-    kept_b = [r.doc_id for r in C.cross_dedup(corpus, seen, broadcast_seen=True).collect()]
-    assert kept_b == [11]
+
+
+def test_cross_dedup_broadcasts_small_seen_unhinted(spark):
+    """A one-row `seen` needs no hint.  Its Python-RDD scan has no size
+    estimate, so the static plan is a sort-merge join; AQE sees the
+    one-row side after its shuffle and executes the anti-join as a
+    BroadcastHashJoin LeftAnti."""
+    seen = spark.createDataFrame([Row(doc_id=1, text="Hello   World")])
+    corpus = spark.range(64).selectExpr(
+        "id AS doc_id", "concat('doc ', CAST(id AS STRING)) AS text"
+    )
+    out = C.cross_dedup(corpus, seen)
+    assert len(out.collect()) == 64
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin" in final and "LeftAnti" in final, plan
+    assert "SortMergeJoin" not in final, plan
 
 
 def test_redact_pii(spark):

@@ -15,7 +15,7 @@ import zipfile
 
 import pytest
 
-from uofi_payroll_etl_main_spark.io import read_excel, read_excel_stdlib, write_excel
+from uofi_payroll_etl_main_spark.io import read_excel_stdlib, write_excel
 
 
 @pytest.fixture(scope="module")
@@ -45,14 +45,6 @@ def test_roundtrip_values_and_headers(roundtrip):
     assert back.columns == df.columns
     got = sorted((r["Pay ID"], r["DESCRIPTION"], r["Calc Date"]) for r in back.collect())
     assert got == sorted(rows)
-
-
-def test_read_excel_dispatches_without_openpyxl(roundtrip, spark):
-    path, rows, *_ = roundtrip
-    # in this container openpyxl is absent -> read_excel must fall back
-    # to the stdlib parser rather than raising
-    back = read_excel(spark, path)
-    assert back.count() == len(rows)
 
 
 def test_datetime_cells_render_iso(spark, tmp_path):
@@ -114,6 +106,41 @@ def test_shared_strings_reader(spark, tmp_path):
     assert got.columns == ["colA", "colB"]
     row = got.collect()[0]
     assert row["colA"] == "hello" and row["colB"] == "42"
+
+
+def test_drift_error_names_the_spreadsheet_row(tmp_path):
+    """The drift error names the row as the sheet numbers it: a skipped
+    blank row counts (<row r=...>), and a sheet without r attributes
+    numbers its rows 1, 2, ..."""
+    from uofi_payroll_etl_main_spark.io import xlsx_rows
+
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+
+    def book(name, rows_xml):
+        path = str(tmp_path / name)
+        with zipfile.ZipFile(path, "w") as zf:
+            zf.writestr(
+                "xl/worksheets/sheet1.xml",
+                f'<worksheet xmlns="{ns}"><sheetData>{rows_xml}</sheetData></worksheet>',
+            )
+        return path
+
+    cell = '<c r="{}" t="inlineStr"><is><t>{}</t></is></c>'.format
+    gapped = book(
+        "gapped.xlsx",
+        f'<row r="1">{cell("A1", "a")}</row>'
+        f'<row r="2">{cell("A2", "1")}</row>'
+        f'<row r="5">{cell("A5", "2")}{cell("B5", "x")}</row>',
+    )
+    with pytest.raises(ValueError, match=r"^row 5 has non-empty cells"):
+        list(xlsx_rows(gapped))
+    unnumbered = book(
+        "unnumbered.xlsx",
+        f'<row>{cell("A1", "a")}</row><row>{cell("A2", "1")}</row>'
+        f'<row>{cell("A3", "2")}{cell("B3", "x")}</row>',
+    )
+    with pytest.raises(ValueError, match=r"^row 3 has non-empty cells"):
+        list(xlsx_rows(unnumbered))
 
 
 class TestXlsxDataSource:
@@ -186,7 +213,7 @@ class TestXlsxDataSource:
         )
         register_xlsx_source(spark)
         df = spark.read.format("xlsx").load(str(tmp_path))
-        with _pytest.raises(Exception, match=r"b1\.xlsx: data row .*refusing"):
+        with _pytest.raises(Exception, match=r"b1\.xlsx: .*row 3"):
             df.collect()
 
     def test_load_reads_only_the_header(self, spark, tmp_path):

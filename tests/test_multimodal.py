@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from uofi_payroll_etl_main_spark.llm.multimodal import (
     FEATURE_DIM,
+    _fake_feature,
     decode_media,
     encode_bmp,
     encode_png,
@@ -210,11 +211,14 @@ def test_strict_mode_raises_on_undecodable(spark):
     df = synth_media(spark, 6)
     with pytest.raises(Exception, match="no decoder available"):
         extract_features(df, use_stub=False).collect()
-    # opaque legacy payloads in auto mode fall back to the stub
-    legacy = synth_media(spark, 6, real_codecs=False)
-    out = extract_features(legacy).collect()
+    # in auto mode the opaque video rows fall back to the crc32 stub
+    out = {r.media_id: r for r in extract_features(df).collect()}
     assert len(out) == 6
-    assert all(0.0 <= x < 1.0 for r in out for x in r.feature)
+    videos = {r.media_id: bytes(r.payload) for r in df.filter("kind = 'video'").collect()}
+    assert videos
+    for mid, payload in videos.items():
+        assert out[mid].feature == pytest.approx(_fake_feature(payload))
+        assert all(0.0 <= x < 1.0 for x in out[mid].feature)
 
 
 def test_sample_frames_every_n(spark):

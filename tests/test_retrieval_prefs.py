@@ -303,3 +303,36 @@ def test_mmr_pluggable_candidates_equals_default(spark):
     )
     key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.mmr_score)  # noqa: E731
     assert sorted(map(key, default.collect())) == sorted(map(key, fed.collect()))
+
+
+def test_mmr_same_rows_under_one_shuffle_partition(spark):
+    """Stage 2's repartition width follows spark.sql.shuffle.partitions;
+    at width 1 every query group shares one partition (and one batch
+    stream), and the selection must not change.  Spark itself refuses a
+    non-positive or non-integer width at conf.set, so the width the
+    kernel reads is always a positive int."""
+    import random
+
+    from pyspark.errors import PySparkException
+    from pyspark.sql.utils import IllegalArgumentException
+
+    from uofi_payroll_etl_main_spark.llm.similarity import mmr_topk
+
+    rnd = random.Random(23)
+    rows = [(i, [rnd.uniform(-1, 1) for _ in range(6)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = df.filter(F.col("vec_id") < 12)
+    key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.mmr_score)  # noqa: E731
+    default = sorted(map(key, mmr_topk(df, queries, k=4, lam=0.6, pool=10).collect()))
+    conf = spark.conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    try:
+        for bad in ("abc", "8.0", "0", "-1"):
+            with pytest.raises((PySparkException, IllegalArgumentException)):
+                conf.set("spark.sql.shuffle.partitions", bad)
+        conf.set("spark.sql.shuffle.partitions", "1")
+        one = sorted(map(key, mmr_topk(df, queries, k=4, lam=0.6, pool=10).collect()))
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(default) == 12 * 4
+    assert one == default

@@ -12,7 +12,7 @@ Layout:
     aggregates   -- mode/min-max/count (A1-A3).
     setops       -- union-by-name (U1).
     catalog      -- file-catalog source (S2) + first-match pick (P5).
-    io           -- sources/sinks (S3-S7); Excel gated behind import-try.
+    io           -- sources/sinks (S3-S7); Excel through stdlib zip+XML.
     report       -- structured run report (V2-V4).
     pipelines    -- PUA / CPA end-to-end dataflows (SURVEY.md section 3).
     llm          -- LLM-training-data operators: dedup, similarity, text,

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "mode_agg",
     "min_max",
-    "count_rows",
     "group_stats",
     "group_corr",
     "group_ols",
@@ -88,11 +87,6 @@ def mode_agg(
 def min_max(df: DataFrame, col: str) -> DataFrame:
     """A2 -- global min/max of a column (ref :440-441)."""
     return df.agg(F.min(col).alias(f"min_{col}"), F.max(col).alias(f"max_{col}"))
-
-
-def count_rows(df: DataFrame) -> int:
-    """A3 -- row count (ref :227-229, :424)."""
-    return df.count()
 
 
 # --------------------------------------------------------------------------

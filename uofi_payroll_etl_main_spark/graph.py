@@ -73,8 +73,11 @@ def pagerank(
     tol (epsilon termination): stop before `iterations` when
     max |rank_{i+1} - rank_i| < tol.  Costs one scalar action per
     iteration (the convergence test is inherently a global reduce) and
-    persists each iterate so the delta check doesn't recompute the
-    chain; iterates are unpersisted as soon as superseded.
+    localCheckpoints each iterate, so the delta check doesn't recompute
+    the chain and the plan doesn't nest one level per iteration.
+    Superseded iterates are never released explicitly: their blocks
+    stay in executor storage until Spark's context cleaner drops the
+    unreferenced checkpoint.
     """
     cols = [F.col(src).alias("__src"), F.col(dst).alias("__dst")]
     if weight_col is not None:

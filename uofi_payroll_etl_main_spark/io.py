@@ -26,9 +26,7 @@ from pyspark.sql import types as T
 __all__ = [
     "read_parquet",
     "read_csv",
-    "write_csv",
     "write_csv_single",
-    "read_excel",
     "read_excel_stdlib",
     "write_excel",
     "load_table",
@@ -112,14 +110,8 @@ def read_csv(
     return reader.csv(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5 -- distributed CSV sink: one file per partition (the 100 TB
-    shape).  Use write_csv_single only at the small parity edge."""
-    df.write.mode(mode).option("header", True).csv(path)
-
-
 def write_csv_single(df: DataFrame, path: str) -> str:
-    """S5 (parity variant) -- single named CSV file like the reference's
+    """S5 -- single named CSV file like the reference's
     ``to_csv`` upload (ref :396-403).  coalesce(1) at the SINK EDGE only
     -- never mid-plan (it would serialize the whole upstream plan onto
     one task).  Returns the final file path."""
@@ -136,10 +128,9 @@ def write_csv_single(df: DataFrame, path: str) -> str:
 # Excel I/O (S3/S6).  xlsx is a zip of XML parts, so the stdlib
 # (zipfile + xml.etree) covers the reference contract -- pd.read_excel of
 # a small extract (ref :84) and to_excel of the final output (ref
-# :410-417) -- with no third-party engine.  When openpyxl IS present,
-# pandas' richer reader is preferred for scans (styles, multi-sheet
-# numerics); the writer always uses the stdlib path (deterministic
-# output, inline strings, ISO datetimes).
+# :410-417) -- with no third-party engine, so the types a scan returns
+# never depend on what is installed: every cell reads as a string, and
+# the writer emits inline strings and ISO datetimes deterministically.
 #
 # The helpers below are the driver-edge tier (single KB-scale workbook,
 # the reference's shape).  Folder-scale Excel fans out through the
@@ -230,8 +221,8 @@ def xlsx_rows(source, sheet: int = 0) -> Iterator:
                     if ci is None:
                         ci = col_of[letters] = _col_index(letters)
                     cells[ci] = v
-                row_el.clear()
                 if width is None:  # the first row is the header
+                    row_el.clear()
                     width = max(cells, default=-1) + 1
                     yield [h if (h := cells.get(i)) is not None else f"col_{i}" for i in range(width)]
                     continue
@@ -241,11 +232,15 @@ def xlsx_rows(source, sheet: int = 0) -> Iterator:
                     # a VALUE past the header width is column drift -- loud
                     # error, never silent cell loss.  (Styled-but-empty
                     # trailing cells, which real spreadsheets carry
-                    # routinely, pad away.)
+                    # routinely, pad away.)  The row is named as the
+                    # spreadsheet numbers it (<row r=...>, so skipped blank
+                    # rows count); a sheet that omits r numbers rows 1, 2, ...
                     raise ValueError(
-                        f"data row {n_data} has non-empty cells past the {width}-column "
-                        "header; refusing to drop trailing cells (column drift)"
+                        f"row {row_el.get('r') or n_data + 2} has non-empty cells past "
+                        f"the {width}-column header; refusing to drop trailing cells "
+                        "(column drift)"
                     )
+                row_el.clear()
                 yield tuple([cells.get(i) for i in range(width)])
                 n_data += 1
     if width is None:
@@ -306,21 +301,6 @@ def read_excel_stdlib(spark: SparkSession, path: str, sheet: int = 0) -> DataFra
     one partition per file."""
     header, data = parse_xlsx(path, sheet)
     return local_frame(spark, data, T.StructType([T.StructField(h, T.StringType()) for h in header]))
-
-
-def read_excel(spark: SparkSession, path: str, sheet_name=0) -> DataFrame:
-    """S3 -- Excel scan (ref pd.read_excel :84).  pandas+openpyxl when
-    installed (richer typed reads); stdlib zip+XML parser otherwise."""
-    try:
-        import openpyxl  # noqa: F401
-        import pandas as pd
-    except ImportError:
-        return read_excel_stdlib(
-            spark, path, sheet=sheet_name if isinstance(sheet_name, int) else 0
-        )
-    pdf = pd.read_excel(path, sheet_name=sheet_name)
-    pdf = pdf.where(pd.notna(pdf), None)
-    return spark.createDataFrame(pdf.astype(object))
 
 
 def xlsx_payload(header, body_rows) -> bytes:

@@ -303,22 +303,19 @@ def cross_dedup(
     seen: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_seen: bool = False,
 ) -> DataFrame:
     """Cross-corpus dedup: drop corpus docs whose normalized fingerprint
     already occurs in `seen` (e.g. the previous training mix).
 
     Both sides reduce to 16-byte digests before they meet, so the
-    anti-join shuffles digests, never text.  Set broadcast_seen=True
-    when `seen` is a benchmark-sized table; default is a shuffled
-    anti-join because "what we already trained on" is usually corpus-
-    sized too.
+    anti-join shuffles digests, never text.  No hint: a benchmark-sized
+    `seen` falls under the broadcast threshold (statically or through
+    AQE) and broadcasts on its own, while a corpus-sized one -- "what we
+    already trained on" usually is -- stays a shuffled anti-join.
     """
     from .text import fingerprint
 
     seen_fp = seen.select(fingerprint(text_col).alias("__fp")).distinct()
-    if broadcast_seen:
-        seen_fp = F.broadcast(seen_fp)
     return (
         corpus.withColumn("__fp", fingerprint(text_col))
         .join(seen_fp, "__fp", "left_anti")

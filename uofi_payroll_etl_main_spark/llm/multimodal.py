@@ -386,31 +386,16 @@ def decode_media(payload: bytes, kind: str) -> dict:
     )
 
 
-def synth_media(spark: SparkSession, n: int = 64, real_codecs: bool = True) -> DataFrame:
-    """Deterministic synthetic media table.  real_codecs=True (default)
-    emits decodable payloads -- PPM images, WAV audio -- so the decode
-    kernels run for real; video rows stay opaque bytes (no stdlib video
-    codec) with a frames count in meta for the sampling path.
-    real_codecs=False keeps the legacy sha2-derived opaque payloads
-    (plumbing-only tests).
+def synth_media(spark: SparkSession, n: int = 64) -> DataFrame:
+    """Deterministic synthetic media table of decodable payloads -- PPM,
+    PNG and JPEG images, WAV audio -- so the decode kernels run for
+    real; video rows stay opaque bytes (no stdlib video codec) with a
+    frames count in meta for the sampling path.
 
     Generation is a mapInPandas over spark.range -- distributed, so a
     large synthetic corpus is produced cluster-side, never on the
     driver."""
     kinds = ["image", "audio", "video"]
-
-    if not real_codecs:
-        return spark.range(n).select(
-            F.col("id").alias("media_id"),
-            F.element_at(
-                F.array(*[F.lit(k) for k in kinds]), (F.col("id") % 3 + 1).cast("int")
-            ).alias("kind"),
-            F.unhex(F.sha2(F.col("id").cast("string"), 256)).alias("payload"),
-            F.create_map(
-                F.lit("frames"), ((F.col("id") % 7) + 1).cast("string"),
-                F.lit("codec"), F.lit("synthetic"),
-            ).alias("meta"),
-        )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "dot",
     "l2_norm",
-    "with_unit_norm",
     "cosine_topk",
     "lsh_topk",
     "embed_dup_pairs",
@@ -68,12 +67,6 @@ def l2_norm(a: Column) -> Column:
             lambda acc, x: acc + x,
         )
     )
-
-
-def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Precompute the norm once per vector (cache-friendly: norms are
-    computed on the scan side, not once per pair)."""
-    return df.withColumn("__norm", l2_norm(F.col(vec_col)))
 
 
 def cosine_topk(

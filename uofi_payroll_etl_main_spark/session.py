@@ -38,8 +38,8 @@ def get_spark(app_name: str = "uofi-payroll-etl-spark", master: str | None = Non
         # failing the exchange (observed in a 100x scale experiment)
         .config("spark.sql.broadcastTimeout", "600")
         .config("spark.sql.shuffle.partitions", cpus)
-        # Arrow for the few driver-edge pandas bridges (Excel sink) and for
-        # the Pandas-UDF multimodal path.
+        # Arrow for driver-edge pandas conversions (toPandas, a frame
+        # built from pandas) and for the Pandas-UDF multimodal path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
