@@ -74,6 +74,37 @@ def test_write_excel_row_cap(spark, tmp_path, monkeypatch):
     assert not (tmp_path / "over.xlsx").exists()
 
 
+def test_xlsx_payload_content_is_pinned():
+    """Every package part of a fixed 4 x 30 input (columns past Z, nulls,
+    datetimes, dates, ints, XML escapes, non-ASCII) hashes to the digest
+    the per-cell column-letter writer produced, so the sink's output does
+    not move with how its XML is built.  The parts are hashed uncompressed
+    and without their timestamps, which follow the clock."""
+    import hashlib
+    import io as _io
+
+    from uofi_payroll_etl_main_spark.io import xlsx_payload
+
+    header = [f"h{i}" for i in range(30)]
+    body = [
+        tuple(
+            None if (r + c) % 5 == 0
+            else datetime.datetime(2025, 1, r + 1, c % 24, 30) if c == 27
+            else datetime.date(2025, 2, r + 1) if c == 28
+            else r * 100 + c if c == 29
+            else f"r{r}c{c} <&> \"q\" ñ"
+            for c in range(30)
+        )
+        for r in range(4)
+    ]
+    zf = zipfile.ZipFile(_io.BytesIO(xlsx_payload(header, body)))
+    assert b'<c r="AD5" t="inlineStr"><is><t xml:space="preserve">329</t>' in zf.read("xl/worksheets/sheet1.xml")
+    digest = hashlib.sha256()
+    for info in zf.infolist():
+        digest.update(info.filename.encode() + b"\0" + bytes([info.compress_type]) + zf.read(info) + b"\0")
+    assert digest.hexdigest() == "8075908804d8351133298a51e997f736b1829529125fabf5659a5a95728e0321"
+
+
 def test_read_excel_stdlib_plans_a_local_relation(roundtrip):
     """The driver-parsed workbook reaches Spark as an Arrow-built
     LocalRelation, not a pickled Python RDD that Python workers would

@@ -723,3 +723,75 @@ def test_scc_empty_self_loops_and_chain(spark):
     assert scc([]) == {}
     assert scc([(1, 1), (2, 2), (3, 3)]) == {1: 1, 2: 2, 3: 3}
     assert scc([(1, 2), (2, 3), (3, 4)]) == {1: 1, 2: 2, 3: 3, 4: 4}
+
+
+def _sf001(sf_dir: str) -> str:
+    """The sf0.01 corpus that sits beside the fixture's sf0.001 one."""
+    import os
+
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+def test_scc_rounds_broadcast_measured_labels(spark, sf_dir, monkeypatch):
+    """g15_scc at sf0.01 builds in at most 40 jobs (69 while each round
+    planned sort-merge joins against checkpoints whose size estimates
+    compound round by round), and a propagation round joins the measured
+    label frame by broadcast, with no sort-merge join left for AQE to
+    demote."""
+    import uuid
+
+    import __spark_entry__ as entrymod
+
+    from uofi_payroll_etl_main_spark import graph
+
+    rounds = []
+    superstep = graph._superstep
+
+    def recording(df, **metrics):
+        if "changed" in metrics:
+            rounds.append(df)
+        return superstep(df, **metrics)
+
+    monkeypatch.setattr(graph, "_superstep", recording)
+    sc = spark.sparkContext
+    group = f"g15-scc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build g15_scc")
+    try:
+        entrymod.queries()["g15_scc"](spark, _sf001(sf_dir))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 40
+    # rounds[0] is the first round, which needs no labels; rounds[1] joins them
+    round2 = rounds[1]
+    round2.collect()
+    plan = round2._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+
+
+def test_fixpoints_same_rows_without_broadcast_and_on_one_partition(spark, sf_dir):
+    """The measured-size broadcast changes plans, never rows: the four
+    checkpointing fixpoints return the same rows with broadcasts off
+    (threshold -1, so every measured join stays a shuffle join) and on a
+    single shuffle partition as under the session defaults."""
+    import __spark_entry__ as entrymod
+
+    names = ["g15_scc", "g8_kcore", "g2_connected_components", "g14_betweenness"]
+    queries = entrymod.queries()
+
+    def run():
+        return {n: sorted(tuple(r) for r in queries[n](spark, _sf001(sf_dir)).collect()) for n in names}
+
+    want = run()
+    assert all(want.values())
+    for key, value in [
+        ("spark.sql.autoBroadcastJoinThreshold", "-1"),
+        ("spark.sql.shuffle.partitions", "1"),
+    ]:
+        before = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            got = run()
+        finally:
+            spark.conf.set(key, before)
+        assert got == want, key

@@ -21,8 +21,12 @@ Scale notes (billions of edges):
     (once) and, with `tol`, one max-delta scalar per iteration.
   * A fixpoint superstep is ONE eager action: `_superstep` checkpoints
     the round's frame (truncating its lineage) and observes the
-    round's convergence counts on that same action, so only those few
-    scalars reach the driver and no probe runs an action of its own.
+    round's row count and convergence counts on that same action, so
+    only those few scalars reach the driver and no probe runs an
+    action of its own.  A later join against a checkpointed iterate
+    broadcasts it when that measured size fits the session's
+    broadcast threshold (`_small`): the planner's own estimate of a
+    checkpoint is inherited from its plan and compounds per round.
 """
 
 from __future__ import annotations
@@ -40,11 +44,23 @@ def _superstep(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
     `localCheckpoint` `df` (cutting its lineage) with `metrics`
     (name=aggregate Column) attached by `DataFrame.observe`, so the
     loop's convergence test rides the checkpoint instead of costing a
-    collect of its own.  Returns (checkpoint, {name: value}); a sum over
-    no rows reads None."""
+    collect of its own.  Returns (checkpoint, {"rows": row count,
+    name: value, ...}); a sum over no rows reads None."""
     obs = Observation()
+    metrics = {"rows": F.count(F.lit(1)), **metrics}
     cp = df.observe(obs, *[c.alias(n) for n, c in metrics.items()]).localCheckpoint(eager=True)
     return cp, obs.get
+
+
+def _small(df: DataFrame, rows: int) -> DataFrame:
+    """`df` as a join's build side: broadcast-hinted when `rows` (a
+    measured count) times Spark's default row width for its schema fits
+    the session's autoBroadcastJoinThreshold (-1: never).  A checkpoint
+    keeps the size estimate of the plan it came from, which compounds
+    round by round, so without the measured count the planner sees an
+    iterate of a few thousand rows as astronomically large."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return F.broadcast(df) if rows * (8 + df._jdf.schema().defaultSize()) <= limit else df
 
 
 def pagerank(
@@ -243,13 +259,10 @@ def connected_components(
     # full-outer symmetric-difference join (which re-shuffles both edge
     # sets).  The hash sum is decimal: a long sum of 64-bit hashes
     # overflows under the driver's ANSI session.
-    signature = {
-        "n": F.count(F.lit(1)),
-        "h": F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-    }
-    e, sig = _superstep(e0, **signature)
+    signature = F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))
+    e, sig = _superstep(e0, h=signature)
     for _ in range(max_iterations):
-        e, sig2 = _superstep(_star(_star(e, large=True), large=False), **signature)
+        e, sig2 = _superstep(_star(_star(e, large=True), large=False), h=signature)
         if sig2 == sig:
             break
         sig = sig2
@@ -518,29 +531,27 @@ def k_core(
     The community/cohesion primitive behind spam-farm detection and
     dense-cluster mining on link graphs.  Scale shape: each round is
     one degree aggregation (map-side combined) + one semi join of the
-    edge set against survivors -- edge-partitioned work, one
+    edge set against broadcast survivors -- edge-partitioned work, one
     `_superstep` whose checkpoint observes the surviving edge count.
     Every node of the symmetrized edge set has an edge in it, so a
     round that removes no node removes no edge: an unchanged edge count
     IS the fixpoint.  Rounds are data-bounded (each removes >= 1 node)
     and capped by `max_iter` as a runaway stop.
     """
-    n_edges = F.count(F.lit(1))
     # undirected simple graph: symmetrize + dedup, drop self-loops
     und, m_prev = _superstep(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        n=n_edges,
+        .distinct()
     )
     for _ in range(int(max_iter)):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-        survivors = deg.filter(F.col("d") >= int(k)).select("a")
+        # a node has at least one edge, so the edge count bounds the nodes
+        survivors = _small(deg.filter(F.col("d") >= int(k)).select("a"), m_prev["rows"])
         und, m = _superstep(
             und.join(survivors, "a", "left_semi")
-            .join(survivors.select(F.col("a").alias("b")), "b", "left_semi"),
-            n=n_edges,
+            .join(survivors.select(F.col("a").alias("b")), "b", "left_semi")
         )
         if m == m_prev:
             break
@@ -862,8 +873,8 @@ def betweenness_approx(
     delta(v) = sum over successors w of sigma_v/sigma_w * (1+delta_w)
     -- one join of level h against level h+1 through the edge list per
     step.  Per-level frames are checkpointed, so lineage is O(1) per
-    superstep; each forward level is one `_superstep` whose observed
-    row count (the only driver traffic) ends the BFS.
+    superstep; each level is one `_superstep` whose observed row count
+    (the only driver traffic) ends the BFS and sizes its joins' builds.
 
     Endpoints are excluded per the classic definition; sources
     contribute no dependency to themselves.  Returns (node,
@@ -881,13 +892,12 @@ def betweenness_approx(
     # compiling it (observed on a 30-node graph)
     e = e.distinct().localCheckpoint()
 
-    lvl0 = (
+    lvl0, m = _superstep(
         sources.select(F.col("node")).distinct()
         .select(F.col("node").alias("s"), F.col("node"))
         .withColumn("sigma", F.lit(1.0))
-        .localCheckpoint()
     )
-    levels = [lvl0]
+    levels, sizes = [lvl0], [m["rows"]]
     for _h in range(1, int(max_depth) + 1):
         frontier = levels[-1]
         if directed:
@@ -907,16 +917,16 @@ def betweenness_approx(
             if len(levels) > 1:
                 recent = recent.union(levels[-2].select("s", "node"))
         nxt, m = _superstep(
-            frontier.join(e, frontier["node"] == e["a"])
+            _small(frontier, sizes[-1]).join(e, frontier["node"] == e["a"])
             .select("s", F.col("b").alias("node"), "sigma")
-            .join(recent, ["s", "node"], "left_anti")
+            .join(_small(recent, sum(sizes)), ["s", "node"], "left_anti")  # bounds either seen set
             .groupBy("s", "node")
             .agg(F.sum("sigma").alias("sigma")),
-            n=F.count(F.lit(1)),
         )
-        if not m["n"]:
+        if not m["rows"]:
             break
         levels.append(nxt)
+        sizes.append(m["rows"])
 
     # backward: delta starts 0 everywhere; fold from the deepest level up
     acc = [
@@ -926,10 +936,10 @@ def betweenness_approx(
         cur = levels[h]
         succ = acc[-1]
         contrib = (
-            cur.join(e, cur["node"] == e["a"])
+            _small(cur, sizes[h]).join(e, cur["node"] == e["a"])
             .select("s", "node", "sigma", F.col("b").alias("w"))
             .join(
-                succ.select(
+                _small(succ, sizes[h + 1]).select(
                     "s",
                     F.col("node").alias("w"),
                     F.col("sigma").alias("sigma_w"),
@@ -990,17 +1000,21 @@ def strongly_connected_components(
     Scale shape: every step is an equi-join/groupBy on node ids over
     the shrinking edge set -- no closure materialization (the oracle's
     reachability-pair blowup is exactly what this avoids); the two
-    directions propagate SIMULTANEOUSLY in one label frame, so the
-    loop length is max(fwd diameter, bwd diameter) rather than their
-    sum.  A round is ONE groupBy("node") over the nodes' own labels and
-    the labels pushed along and against the edges, checkpointed by one
-    `_superstep` that observes `changed` (nodes whose label moved) and
-    `open` (nodes with flabel != blabel, i.e. not settled at the
-    fixpoint).  A peel ends when a round changes nothing; its `open`
-    says whether another peel is needed, and only then is the edge set
-    restricted to the still-open nodes (one checkpoint).  Settled nodes
-    are filters over each peel's last checkpoint, unioned once at the
-    end.  Rounds are bounded by the unassigned subgraph's diameter per
+    directions propagate SIMULTANEOUSLY over one bidirectional edge
+    frame (src, dst, fwd) -- each edge once per direction plus one
+    NULL-`fwd` row per node that carries its own labels -- so the loop
+    length is max(fwd diameter, bwd diameter) rather than their sum.  A
+    round is ONE join of that frame with the labels of `src` (none in a
+    peel's first round, where every label is its node) and ONE
+    groupBy on `dst`, checkpointed by one `_superstep` that observes
+    `changed` (nodes whose label moved) and `open` (nodes with flabel !=
+    blabel, i.e. not settled at the fixpoint).  The label frame is the
+    join's build side, broadcast by its measured row count (`_small`).
+    A peel ends when a round changes nothing; its `open` says whether
+    another peel is needed, and only then is the edge frame restricted
+    to the still-open nodes (one checkpoint).  Settled nodes are
+    filters over each peel's last checkpoint, unioned once at the end.
+    Rounds are bounded by the unassigned subgraph's diameter per
     propagation, peels by the SCC condensation depth; both
     driver-bounded via max_* args.
 
@@ -1011,60 +1025,41 @@ def strongly_connected_components(
     hit before convergence (raise the max_* args for deep graphs)
     rather than return a wrong or partial assignment.
     """
-    e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
+    s, d = F.col(src), F.col(dst)
+    e = (
+        edges.filter(s.isNotNull() & d.isNotNull())
+        .select(F.inline(F.array(*[
+            F.struct(a.alias("src"), b.alias("dst"), F.lit(f).cast("boolean").alias("fwd"))
+            for a, b, f in [(s, d, True), (d, s, False), (s, s, None), (d, d, None)]
+        ])))
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-    def _round(lab: DataFrame, ed: DataFrame) -> tuple[DataFrame, dict]:
-        # one synchronous step of min-label propagation along (flabel)
-        # and against (blabel) the edges; every node keeps its own row,
-        # whose labels also ride as __f0/__b0 to tell what changed (the
-        # pushed rows carry NULL in the columns they lack)
-        own = lab.select(
-            "node", "flabel", "blabel",
-            F.col("flabel").alias("__f0"), F.col("blabel").alias("__b0"),
-        )
-        fwd = ed.join(lab.select(F.col("node").alias("s"), "flabel"), "s").select(
-            F.col("d").alias("node"), "flabel"
-        )
-        bwd = ed.join(lab.select(F.col("node").alias("d"), "blabel"), "d").select(
-            F.col("s").alias("node"), "blabel"
-        )
-        new = (
-            own.unionByName(fwd, allowMissingColumns=True)
-            .unionByName(bwd, allowMissingColumns=True)
-            .groupBy("node")
-            .agg(
-                F.min("flabel").alias("flabel"),
-                F.min("blabel").alias("blabel"),
-                (
-                    (F.min("flabel") < F.min("__f0")) | (F.min("blabel") < F.min("__b0"))
-                ).cast("int").alias("__chg"),
-            )
-        )
-        cp, m = _superstep(
-            new,
-            changed=F.sum("__chg"),
-            open=F.sum((F.col("flabel") != F.col("blabel")).cast("int")),
-        )
-        return cp.drop("__chg"), m
-
-    active = (
-        e0.select(F.col("s").alias("node"))
-        .union(e0.select(F.col("d").alias("node")))
-        .distinct()
-    )
-    ed = e0
+    # a pair pushes its src's flabel along the edge (fwd), its blabel
+    # against it (not fwd), and a node's own row (NULL) pushes both
+    own = F.col("fwd").isNull()
+    fl = F.min(F.when(F.coalesce("fwd", F.lit(True)), F.col("flabel")))
+    bl = F.min(F.when(~F.coalesce("fwd", F.lit(False)), F.col("blabel")))
     settled = []
     for _ in range(max_peels):
-        lab = active.select("node", F.col("node").alias("flabel"), F.col("node").alias("blabel"))
+        pairs = e.withColumns({"flabel": F.col("src"), "blabel": F.col("src")})
         for _ in range(max_prop_rounds):
-            lab, m = _round(lab, ed)
+            lab, m = _superstep(
+                pairs.groupBy(F.col("dst").alias("node")).agg(
+                    fl.alias("flabel"),
+                    bl.alias("blabel"),
+                    (
+                        (fl < F.min(F.when(own, F.col("flabel"))))
+                        | (bl < F.min(F.when(own, F.col("blabel"))))
+                    ).cast("int").alias("__chg"),
+                ),
+                changed=F.sum("__chg"),
+                open=F.sum((F.col("flabel") != F.col("blabel")).cast("int")),
+            )
+            lab = lab.drop("__chg")
             if not m["changed"]:
                 break
+            pairs = e.join(_small(lab.withColumnRenamed("node", "src"), m["rows"]), "src")
         else:
             raise RuntimeError(
                 f"strongly_connected_components: label propagation did not "
@@ -1080,9 +1075,9 @@ def strongly_connected_components(
         if not m["open"]:
             break
         active = lab.filter(F.col("flabel") != F.col("blabel")).select("node")
-        ed = (
-            ed.join(active.withColumnRenamed("node", "s"), "s", "left_semi")
-            .join(active.withColumnRenamed("node", "d"), "d", "left_semi")
+        e = (
+            e.join(_small(active.toDF("src"), m["open"]), "src", "left_semi")
+            .join(_small(active.toDF("dst"), m["open"]), "dst", "left_semi")
             .localCheckpoint(eager=True)
         )
     else:

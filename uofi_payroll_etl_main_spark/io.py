@@ -323,14 +323,18 @@ def xlsx_payload(header, body_rows) -> bytes:
             return v.strftime("%Y-%m-%d")
         return str(v)
 
+    letters: list[str] = []  # column index -> A1 letters, computed once per column
+
     def row_xml(ri: int, values) -> str:
+        if len(values) > len(letters):
+            letters.extend(_col_letter(ci) for ci in range(len(letters), len(values)))
         cells = []
-        for ci, v in enumerate(values):
+        for letter, v in zip(letters, values):
             t = cell_text(v)
             if t is None:
                 continue
             cells.append(
-                f'<c r="{_col_letter(ci)}{ri}" t="inlineStr"><is><t xml:space="preserve">'
+                f'<c r="{letter}{ri}" t="inlineStr"><is><t xml:space="preserve">'
                 f"{_xlsx_escape(t)}</t></is></c>"
             )
         return f'<row r="{ri}">' + "".join(cells) + "</row>"
