@@ -11,9 +11,10 @@ import warnings
 import pytest
 from pyspark.sql import Row
 
-from uofi_payroll_etl_main_spark.io import write_excel
+from uofi_payroll_etl_main_spark.io import local_frame, write_excel
 from uofi_payroll_etl_main_spark.pipelines.cpa import CPA_OUTPUT_COLUMNS, run_cpa
 from uofi_payroll_etl_main_spark.pipelines.pua import run_pua
+from uofi_payroll_etl_main_spark.registry_pipelines import pipe_pua
 from uofi_payroll_etl_main_spark.report import FanOutWarning
 
 
@@ -313,3 +314,147 @@ def test_pipelines_build_without_jobs(spark, dims):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_cpa_keep_first_collapses_duplicates_and_prefers_earliest_bw(spark, dims):
+    """D3 + D4 (ref :545-547) as one keep-first: a row fully duplicated at
+    two positions comes out once, and of the rows sharing a UIN Job the
+    earliest BW row wins over a later BW row and over an MN row."""
+    ts_org, ts_dept, overtime, te_m = dims
+    bw = spark.createDataFrame(
+        [
+            _cert_row(UIN="777777777", COLLEGE="KV-Dup"),
+            _cert_row(COLLEGE="KV-Earliest"),
+            _cert_row(UIN="777777777", COLLEGE="KV-Dup"),  # full duplicate of row 0
+            _cert_row(COLLEGE="KV-Later"),                 # same UIN Job, later in BW
+        ],
+        CERT_SCHEMA,
+    )
+    mn = spark.createDataFrame(
+        [_cert_row(PAY_ID="MN", COLLEGE="KV-Monthly")], CERT_SCHEMA  # same UIN Job in MN
+    )
+    out, _ = run_cpa(bw, mn, ts_org, ts_dept, overtime, te_m, fy_end_year=2025)
+    got = sorted((r["UIN"], r["Pay ID"], r["College Name"]) for r in out.collect())
+    assert got == [("111111111", "BW", "Earliest"), ("777777777", "BW", "Dup")]
+
+
+# ---------- driver-held dims ----------
+
+
+@pytest.fixture(scope="module")
+def local_dims(spark):
+    """The `dims` tables as io.local_frame frames (Arrow LocalRelations)."""
+    return (
+        local_frame(spark, [("1-602", "Physics"), ("1-603", "Math")],
+                    "`TS-Org Code` string, `TS-Org Title` string"),
+        local_frame(spark, [("1-123", "Engineering Dept")],
+                    "`TS-Org Dept Code` string, `TS-Org Dept Title` string"),
+        local_frame(spark, [("EA", "BW", "Non-Exempt", "Academic"),
+                            ("EB", "MN", "Exempt", "Monthly")],
+                    "`Job Eclass` string, `Pay ID` string, `Overtime FLSA` string,"
+                    " `Job Detail E-Class Long Desc` string"),
+        local_frame(spark, [("111111111-U10000-00", "W", "Web Time", "Clock"),
+                            ("x", "W", "Web Time", "Clock"), ("y", "B", "Banner", "Batch")],
+                    "`UIN Job` string, `TE M` string, `Time Entry Method` string,"
+                    " `Time Entry Type` string"),
+    )
+
+
+def _run_both(spark, dims):
+    """(PUA rows, CPA rows), each sorted, of a small fact through both
+    pipelines against `dims`."""
+    pua = spark.createDataFrame(
+        [_pua_row(), _pua_row(), _pua_row(UIN="222222222", **{"TS ORG": "603"})]
+    )
+    bw = spark.createDataFrame(
+        [_cert_row(), _cert_row(UIN="333333333", JOB_ECLS="EB", PAY_ID="MN")], CERT_SCHEMA
+    )
+    mn = spark.createDataFrame([_cert_row(PAY_ID="MN", COLLEGE="KV-Monthly")], CERT_SCHEMA)
+    pua_out, _ = run_pua(pua, *dims)
+    cpa_out, _ = run_cpa(bw, mn, *dims, fy_end_year=2025)
+    return (sorted((r.asDict() for r in pua_out.collect()), key=repr),
+            sorted((r.asDict() for r in cpa_out.collect()), key=repr))
+
+
+def _shuffles_over_local_scans(df) -> list[str]:
+    """The shuffle Exchange lines of `df`'s executed plan whose subtree
+    holds a LocalTableScan."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    found = []
+    for i, line in enumerate(lines):
+        if not line.lstrip(" :+-").startswith("Exchange "):
+            continue
+        for below in lines[i + 1:]:
+            if depth(below) <= depth(line):
+                break
+            if "LocalTableScan" in below:
+                found.append(line.strip())
+                break
+    return found
+
+
+def test_local_frame_is_one_partition_up_to_one_file_split(spark):
+    rows = [(str(i), f"name-{i}") for i in range(40)]
+    schema = "k string, v string"
+    assert local_frame(spark, rows, schema).rdd.getNumPartitions() == 1
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        assert local_frame(spark, rows, schema).rdd.getNumPartitions() > 1
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_driver_held_dims_plan_no_shuffle(spark, sf_dir, local_dims):
+    """Over a one-partition dim, dedup, mode-aggregate groupBy and window
+    already have their distribution: after the action, no shuffle
+    Exchange has a LocalTableScan below it."""
+    pua = pipe_pua(spark, sf_dir)
+    assert pua.collect()
+    assert _shuffles_over_local_scans(pua) == []
+    bw = spark.createDataFrame([_cert_row()], CERT_SCHEMA)
+    mn = spark.createDataFrame([_cert_row(PAY_ID="MN")], CERT_SCHEMA)
+    cpa, _ = run_cpa(bw, mn, *local_dims, fy_end_year=2025)
+    assert cpa.collect()
+    assert "LocalTableScan" in cpa._jdf.queryExecution().executedPlan().toString()
+    assert _shuffles_over_local_scans(cpa) == []
+
+
+def test_local_dims_same_rows_under_other_settings(spark, local_dims):
+    """Plans over driver-held dims change with the settings, rows never:
+    broadcasts off, one shuffle partition and ANSI on all return the
+    rows of the session defaults."""
+    want = _run_both(spark, local_dims)
+    assert all(want)
+    for key, value in [
+        ("spark.sql.autoBroadcastJoinThreshold", "-1"),
+        ("spark.sql.shuffle.partitions", "1"),
+        ("spark.sql.ansi.enabled", "true"),
+    ]:
+        before = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            got = _run_both(spark, local_dims)
+        finally:
+            spark.conf.set(key, before)
+        assert got == want, key
+
+
+def test_zero_row_local_dims_keep_every_fact_row(spark, local_dims):
+    """Empty driver-held dims: every fact row survives the left joins,
+    with null dim columns."""
+    empty = tuple(local_frame(spark, [], d.schema) for d in local_dims)
+    want_pua, want_cpa = _run_both(spark, local_dims)
+    pua, cpa = _run_both(spark, empty)
+    assert len(pua) == len(want_pua) and len(cpa) == len(want_cpa)
+    for r in pua:
+        assert r["TS-Org Title"] is None and r["TS-Org Dept Code"] is None
+        assert r["Overtime"] is None
+    for r in cpa:
+        assert r["TS-Org Title"] is None and r["TS-Org Dept Title"] is None
+        assert r["Overtime"] is None and r["TE M"] is None

@@ -282,14 +282,22 @@ def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType
     broadcasting it is a JVM-only job; a list of rows would instead
     become a pickled Python RDD that Python workers must unpickle on
     every action.  Timestamps travel as UTC instants, so a naive
-    datetime means UTC (the list path read it as process-local time)."""
+    datetime means UTC (the list path read it as process-local time).
+
+    A table no larger than one file split (`spark.sql.files.maxPartitionBytes`)
+    is one partition, as a file scan of that size would be: its dedup,
+    groupBy and window then already have the distribution they need and
+    plan no Exchange.  A LocalTableScan would otherwise report one
+    partition per row up to the core count."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     batch = arrow_batch(rows, to_arrow_schema(schema))
-    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)
+    df = spark.createDataFrame(pa.Table.from_batches([batch]), schema)
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return df.coalesce(1) if batch.nbytes <= split else df
 
 
 def read_excel_stdlib(spark: SparkSession, path: str, sheet: int = 0) -> DataFrame:

@@ -6,6 +6,8 @@ deduplicated dimension projection (etl_payroll_pipeline.py :263-295,
 :487-540).  The Spark-first shape is therefore: dedup the dim projection,
 `F.broadcast` it, and left-join -- the fact side never shuffles, which is
 the difference between O(fact) scan and O(fact) shuffle at 100 TB.
+A driver-held dim (`io.local_frame`) is one partition, so it
+deduplicates in one task with no Exchange.
 
 The fan-out check (`safe_merge_left`, ref :226-232) is the reference's
 own: the fact row count before the join against the row count after it.

@@ -160,15 +160,12 @@ def run_cpa(
     )
 
     # P7 ACTION filter -> D3 full dedup -> D4 keep-first by UIN Job
-    # (ref :545-547).
+    # (ref :545-547) as ONE keep-first: the earliest row of a UIN Job is
+    # also the earliest row of its full-duplicate group (UIN Job is one of
+    # the data columns), and the (src, row) order is unique per row, so
+    # D3 never removes the row D4 keeps.  A null UIN Job groups the same
+    # way in both forms.
     df = df.filter(F.col("ACTION") == "3 - Apply")
-    # D3 must ignore the order column (identical rows from different
-    # positions ARE duplicates): group by every data column, keep the
-    # earliest position -- exactly pandas drop_duplicates() keep-first.
-    data_cols = [c for c in df.columns if c != INGEST_ORDER_COL]
-    df = df.groupBy(*[F.col(c) for c in data_cols]).agg(
-        F.min(INGEST_ORDER_COL).alias(INGEST_ORDER_COL)
-    )
     df = keep_first(df, ["UIN Job"], F.col(INGEST_ORDER_COL))
 
     # E7 college split with no-hyphen guard (ref :549-560).
