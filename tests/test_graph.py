@@ -770,13 +770,18 @@ def test_scc_rounds_broadcast_measured_labels(spark, sf_dir, monkeypatch):
 
 
 def test_fixpoints_same_rows_without_broadcast_and_on_one_partition(spark, sf_dir):
-    """The measured-size broadcast changes plans, never rows: the four
-    checkpointing fixpoints return the same rows with broadcasts off
-    (threshold -1, so every measured join stays a shuffle join) and on a
-    single shuffle partition as under the session defaults."""
+    """The measured-size broadcast changes plans, never rows: the
+    checkpointing fixpoints and rank iterations return the same rows
+    with broadcasts off (threshold -1, so every measured join stays a
+    shuffle join) and on a single shuffle partition as under the session
+    defaults."""
     import __spark_entry__ as entrymod
 
-    names = ["g15_scc", "g8_kcore", "g2_connected_components", "g14_betweenness"]
+    names = [
+        "g15_scc", "g8_kcore", "g2_connected_components", "g14_betweenness",
+        "g1_pagerank", "g5_label_propagation", "g6_bfs_hops", "g7_shortest_paths",
+        "g9_personalized_pr", "g12_hits", "g13_weighted_pr",
+    ]
     queries = entrymod.queries()
 
     def run():
@@ -795,3 +800,39 @@ def test_fixpoints_same_rows_without_broadcast_and_on_one_partition(spark, sf_di
         finally:
             spark.conf.set(key, before)
         assert got == want, key
+
+
+def test_iterative_operators_cut_lineage_and_cache_nothing(spark, sf_dir):
+    """Every iterative graph operator advances by `_superstep`
+    checkpoints and reads its scalars off them: at sf0.01 g12_hits
+    builds and collects in at most 20 jobs (over 130 while each
+    half-iteration joined back a one-row normalizer over an unbroken
+    lineage), g6_bfs_hops's optimized plan is a flat union of per-level
+    checkpoints (tens of thousands of lines while each level's union
+    nested the previous distance frame twice), and the rank, walk and
+    propagation queries leave nothing in the session's cache."""
+    import uuid
+
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    sc = spark.sparkContext
+    group = f"g12-hits-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build and collect g12_hits")
+    try:
+        queries["g12_hits"](spark, _sf001(sf_dir)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 20
+
+    bfs = queries["g6_bfs_hops"](spark, _sf001(sf_dir))
+    assert len(bfs._jdf.queryExecution().optimizedPlan().toString().splitlines()) <= 1000
+
+    spark.catalog.clearCache()
+    for name in [
+        "g1_pagerank", "g5_label_propagation", "g6_bfs_hops", "g7_shortest_paths",
+        "g9_personalized_pr", "g11_modularity", "g12_hits",
+    ]:
+        queries[name](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

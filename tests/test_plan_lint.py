@@ -81,7 +81,6 @@ BNLJ_ALLOWED = {
     "a54_brown_forsythe",   # single-row (N, k, T1) totals broadcast
     "a47_assoc_rules",      # single-row n-baskets broadcast
     "v15_monitor",          # composes v12/v13 scalar-broadcast shapes; inherits their BNLJ rows
-    "g12_hits",             # one-row L1-normalizer broadcast per half-iteration
     "s12_zorder_profile",   # single-row (min,max) z-range broadcast
     "s24_hilbert_profile",  # single-row (min,max) hilbert-range broadcast
     "a24_quantile_sketch",  # single-row (min,max) bounds broadcast
@@ -110,25 +109,16 @@ BNLJ_ALLOWED = {
 SKIP_PREFIXES = ("st_",)
 SKIP = {"llm_dup_clusters", "llm_near_dedup_corpus", "llm_near_dedup_keep_best"}
 
-# Bounded-iteration algorithms whose final frame legitimately references
-# every superstep's lineage (depth is a fixed parameter, and the heavy
-# per-round state IS localCheckpointed where it feeds two consumers);
-# plus composed pipelines that re-derive a small input several times by
-# design (cheaper than caching at scale).
+# Multi-way joins and bounded candidate levels that re-read one input,
+# and composed pipelines that re-derive a small input several times by
+# design (cheaper than caching at scale).  The iterative graph operators
+# checkpoint every superstep, so their plans need no entry here.
 MANY_SCANS_ALLOWED = {
     "a43_sketch_overlap",    # register table referenced per pair side
     "a46_itemsets",          # L1/L2/L3 candidate levels re-read baskets
     "a47_assoc_rules",       # rule table re-reads L1/L2 supports
     "g10_adamic_adar",       # two-hop neighbor join re-reads edges
-    "g11_modularity",        # community x edge-end joins re-read edges
-    "g12_hits",              # per-half-iteration normalizer (bounded n_iter)
-    "g13_weighted_pr",       # bounded n_iter lineage
-    "g1_pagerank",           # bounded n_iter lineage
     "g3_triangle_count",     # edge table joined 3 ways
-    "g5_label_propagation",  # bounded n_iter lineage
-    "g6_bfs_hops",           # per-level frontier lineage (depth-capped)
-    "g7_shortest_paths",     # per-level frontier lineage (depth-capped)
-    "g9_personalized_pr",    # bounded n_iter lineage
     "llm_curation_pipeline", # composed funnel re-derives documents
     "llm_perplexity_buckets",# train/held-out/vocab views of one corpus
     "v12_psi",               # expected/actual histogram halves x bounds

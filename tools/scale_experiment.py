@@ -24,6 +24,8 @@ linear-cost operator with nontrivial fixed overhead the ratio should be
 well under N; a ratio >> N is superlinear cost and a scale bug.
 
 Usage: python tools/scale_experiment.py [N_COPIES]
+       (SPARK_GRAFT_SCALE_QUERIES=q1,q2 times those queries instead of
+       the headliners)
 """
 
 from __future__ import annotations
@@ -135,9 +137,6 @@ def build(spark, src: str, dst: str, n: int) -> None:
 
 
 def main() -> None:
-    global HEADLINERS
-    if os.environ.get("SCALE_EXP_QUERIES"):
-        HEADLINERS = os.environ["SCALE_EXP_QUERIES"].split(",")
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     dst = f"/tmp/spark_graft_scale{n}" + (

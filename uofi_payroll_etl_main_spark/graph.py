@@ -14,19 +14,22 @@ contributions are summed as DECIMAL(38,18) -- exact, order-independent
 SQL of the same arithmetic) hash-matches bit-for-bit.
 
 Scale notes (billions of edges):
-  * Each iteration is one shuffle: edges pre-joined with out-degree
-    once (reused across iterations), then ranks join on src (shuffle
-    bounded by node count, with AQE handling hub skew) and aggregate
-    on dst with map-side combine.  PageRank collects the node COUNT
-    (once) and, with `tol`, one max-delta scalar per iteration.
-  * A fixpoint superstep is ONE eager action: `_superstep` checkpoints
-    the round's frame (truncating its lineage) and observes the
-    round's row count and convergence counts on that same action, so
-    only those few scalars reach the driver and no probe runs an
-    action of its own.  A later join against a checkpointed iterate
-    broadcasts it when that measured size fits the session's
-    broadcast threshold (`_small`): the planner's own estimate of a
-    checkpoint is inherited from its plan and compounds per round.
+  * Each rank iteration is one shuffle: edges pre-joined with
+    out-degree once (checkpointed, reused across iterations), then
+    ranks join on src and aggregate on dst with map-side combine.
+  * Every iterative operator here advances by supersteps, and a
+    superstep is ONE eager action: `_superstep` checkpoints the
+    round's frame (truncating its lineage) and observes the round's
+    row count and the scalars the loop needs (convergence counts,
+    PageRank's max delta and dangling mass, HITS's normalizers) on
+    that same action, so only those few scalars reach the driver and
+    no probe runs an action of its own.  No frame goes through the
+    session cache: a superseded checkpoint's blocks are released by
+    Spark's context cleaner once nothing references it.  A later join
+    against a checkpointed iterate broadcasts it when that measured
+    size fits the session's broadcast threshold (`_small`): the
+    planner's own estimate of a checkpoint is inherited from its plan
+    and compounds per round.
 """
 
 from __future__ import annotations
@@ -63,6 +66,80 @@ def _small(df: DataFrame, rows: int) -> DataFrame:
     return F.broadcast(df) if rows * (8 + df._jdf.schema().defaultSize()) <= limit else df
 
 
+_DEC = "decimal(38,18)"
+
+
+def _walk_edges(
+    edges: DataFrame, src: str, dst: str, weight_col: str | None
+) -> tuple[DataFrame, DataFrame]:
+    """The checkpointed (__src, __dst[, __w]) edges of a rank walk, and
+    a checkpoint of the same edges with their source's out-degree (the
+    summed out-weight when weighted) as `__od`."""
+    cols = [F.col(src).alias("__src"), F.col(dst).alias("__dst")]
+    if weight_col is not None:
+        # weighted variant: an edge contributes rank * w / strength(u)
+        # (strength = summed out-weights) -- endorsement proportional to
+        # interaction volume instead of 1/outdeg
+        cols.append(F.col(weight_col).alias("__w"))
+    e, m = _superstep(edges.select(*cols))
+    deg = e.groupBy("__src").agg(
+        (F.count("*") if weight_col is None else F.sum("__w")).alias("__od")
+    )
+    return e, _superstep(e.join(_small(deg, m["rows"]), "__src"))[0]
+
+
+def _power_iteration(
+    out: DataFrame,
+    ranks: DataFrame,
+    teleport: Column,
+    iterations: int,
+    damping: float,
+    dangling: bool = False,
+    tol: float | None = None,
+) -> DataFrame:
+    """The power iteration `pagerank` and `personalized_pagerank`
+    share over the out-degree edges `out` of `_walk_edges`:
+    rank_{i+1}(v) = teleport + d * sum over in-edges of
+    rank_i(u) / outdeg(u) (rank * w / strength over weighted edges), each
+    contribution a DECIMAL(38,18) so the sum is exact and
+    order-independent.  `ranks` is the start iterate (node, ..., rank);
+    its other columns ride along every iterate.
+
+    Each iterate is one `_superstep` that observes its max change from
+    the last (the `tol` test) and, with `dangling`, the rank mass on
+    nodes flagged `__dang`, which the next iteration spreads as
+    d * mass / N over all N nodes."""
+    share = F.col("rank") * F.col("__w") if "__w" in out.columns else F.col("rank")
+    mass = {"dm": F.sum(F.when(F.col("__dang"), F.col("rank").cast(_DEC)))} if dangling else {}
+    ranks, m = _superstep(ranks, **mass)
+    n = m["rows"]
+    keep = [c for c in ranks.columns if c != "rank"]
+    for _ in range(iterations):
+        r = _small(ranks, n)
+        contribs = (
+            out.join(r, out["__src"] == r["node"])
+            .select(F.col("__dst").alias("node"), (share / F.col("__od")).cast(_DEC).alias("__c"))
+            .groupBy("node")
+            .agg(F.sum("__c").alias("__s"))
+        )
+        rank = teleport + F.lit(damping) * F.coalesce(F.col("__s").cast("double"), F.lit(0.0))
+        if dangling:
+            # an observed decimal reads back as its exact value; cast it
+            # to the sum's own type so the double is the one Spark reads
+            dm = F.lit(m["dm"]).cast(_DEC).cast("double")
+            rank = rank + F.lit(damping) * F.coalesce(dm, F.lit(0.0)) / F.lit(float(n))
+        ranks, m = _superstep(
+            ranks.join(_small(contribs, n), "node", "left")  # a node per row at most
+            .select(*keep, rank.alias("rank"), F.col("rank").alias("__prev")),
+            delta=F.max(F.abs(F.col("rank") - F.col("__prev"))),
+            **mass,
+        )
+        ranks = ranks.drop("__prev")
+        if tol is not None and m["delta"] is not None and m["delta"] < tol:
+            break
+    return ranks
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -82,99 +159,35 @@ def pagerank(
     redistribute_dangling=True adds the full formulation's correction:
     mass parked on nodes with no out-edges is spread uniformly
     (d * dangling_mass / N added to every node), so total rank stays 1
-    instead of leaking.  The dangling sum is a ONE-ROW aggregate joined
-    back by broadcast -- it never leaves the engine, no extra driver
-    action.
+    instead of leaking.  The dangling mass is observed on each
+    iterate's checkpoint and enters the next iteration as a literal.
 
     tol (epsilon termination): stop before `iterations` when
-    max |rank_{i+1} - rank_i| < tol.  Costs one scalar action per
-    iteration (the convergence test is inherently a global reduce) and
-    localCheckpoints each iterate, so the delta check doesn't recompute
-    the chain and the plan doesn't nest one level per iteration.
-    Superseded iterates are never released explicitly: their blocks
-    stay in executor storage until Spark's context cleaner drops the
-    unreferenced checkpoint.
+    max |rank_{i+1} - rank_i| < tol, a max observed on the iterate's
+    checkpoint.  Every iterate is one `_superstep` either way, so the
+    plan never nests one level per iteration.  (Production note:
+    `_superstep`'s local checkpoint dies with an executor; a real
+    cluster would want a reliable checkpoint.)
     """
-    cols = [F.col(src).alias("__src"), F.col(dst).alias("__dst")]
-    if weight_col is not None:
-        # weighted variant: an edge contributes rank * w / strength(u)
-        # (strength = summed out-weights) -- endorsement proportional to
-        # interaction volume instead of 1/outdeg
-        cols.append(F.col(weight_col).alias("__w"))
-    e = edges.select(*cols)
-    nodes = (
-        e.select(F.col("__src").alias("node"))
-        .union(e.select(F.col("__dst").alias("node")))
-        .distinct()
-        .persist()  # read once per iteration; without it the edge
-        # subplan re-expands into every iteration's lineage and the
-        # plan recomputes the edge build O(iterations) times
+    e, out = _walk_edges(edges, src, dst, weight_col)
+    # a node is dangling unless it is the (non-null) source of an edge
+    nodes, m = _superstep(
+        e.select(F.col("__src").alias("node"), F.col("__src").isNotNull().alias("__out"))
+        .union(e.select(F.col("__dst").alias("node"), F.lit(False).alias("__out")))
+        .groupBy("node")
+        .agg((~F.bool_or("__out")).alias("__dang"))
     )
-    n = nodes.count()
-    if weight_col is None:
-        deg = e.groupBy("__src").agg(F.count("*").alias("__od"))
-    else:
-        deg = e.groupBy("__src").agg(F.sum("__w").alias("__od"))
-    weighted = e.join(deg, "__src").persist()  # reused every iteration
-    base = (1.0 - damping) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iterations):
-        contribs = (
-            weighted.join(ranks, weighted["__src"] == ranks["node"])
-            .select(
-                F.col("__dst").alias("node"),
-                (
-                    F.col("rank") / F.col("__od")
-                    if weight_col is None
-                    else F.col("rank") * F.col("__w") / F.col("__od")
-                ).cast("decimal(38,18)").alias("__c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__s"))
-        )
-        new = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.lit(damping)
-                * F.coalesce(F.col("__s").cast("double"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if redistribute_dangling:
-            dangling = (
-                ranks.join(deg, ranks["node"] == deg["__src"], "left_anti")
-                .agg(F.sum(F.col("rank").cast("decimal(38,18)")).alias("__dm"))
-            )
-            new = new.crossJoin(F.broadcast(dangling)).select(
-                "node",
-                (
-                    F.col("rank")
-                    + F.lit(damping)
-                    * F.coalesce(F.col("__dm").cast("double"), F.lit(0.0))
-                    / F.lit(float(n))
-                ).alias("rank"),
-            )
-        if tol is not None:
-            # localCheckpoint TRUNCATES LINEAGE, not just caches: with
-            # plain persist the logical plan still nests one level per
-            # iteration and Catalyst analysis OOMs the driver near ~100
-            # iterations.  (Production note: prefer reliable
-            # checkpoint() on a real cluster -- localCheckpoint dies
-            # with an executor.)
-            new = new.localCheckpoint(eager=True)
-            delta_row = (
-                new.alias("a")
-                .join(ranks.alias("b"), "node")
-                .agg(F.max(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("__delta"))
-                .collect()
-            )
-            ranks = new
-            delta = delta_row[0]["__delta"]
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new
-    return ranks
+    n = m["rows"]
+    ranks = _power_iteration(
+        out,
+        nodes.withColumn("rank", F.lit(1.0 / n)),
+        F.lit((1.0 - damping) / n),
+        iterations,
+        damping,
+        dangling=redistribute_dangling,
+        tol=tol,
+    )
+    return ranks.select("node", "rank")
 
 
 def connected_components(
@@ -217,12 +230,11 @@ def connected_components(
     )
     # isolated sources/dests never appear in e0 (self-loops dropped);
     # they are their own components and are re-attached at the end
-    all_nodes = (
+    all_nodes, n = _superstep(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .filter(F.col("node").isNotNull())
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _star(ed: DataFrame, large: bool) -> DataFrame:
@@ -272,7 +284,7 @@ def connected_components(
         e.select(F.col("b").alias("node"), F.col("a").alias("component"))
     ).groupBy("node").agg(F.min("component").alias("component"))
     return (
-        all_nodes.join(membership, "node", "left")
+        all_nodes.join(_small(membership, n["rows"]), "node", "left")  # a node per row at most
         .select("node", F.coalesce("component", F.col("node")).alias("component"))
     )
 
@@ -372,23 +384,26 @@ def label_propagation(
 
     Per round: one groupBy over the neighbor-label join (map-side
     partial counts), one rank window bounded by each node's distinct
-    neighbor labels.  The edge frame is persisted once and reused every
-    round; isolated nodes keep their own label.
+    neighbor labels.  The edge frame is checkpointed once and reused
+    every round, and each round's labels are one `_superstep` whose
+    observed row count sizes the next round's joins; isolated nodes
+    keep their own label.
     """
     from pyspark.sql import Window
 
-    bidir = (
+    bidir, _ = _superstep(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .dropDuplicates()
-        .persist()
     )
-    nodes = bidir.select(F.col("a").alias("node")).dropDuplicates()
-    labels = nodes.withColumn("label", F.col("node"))
+    labels, m = _superstep(
+        bidir.select(F.col("a").alias("node")).dropDuplicates().withColumn("label", F.col("node"))
+    )
     w = Window.partitionBy("a").orderBy(F.desc("c"), F.asc("label"))
     for _ in range(int(iterations)):
+        lab = _small(labels, m["rows"])
         counts = (
-            bidir.join(labels, bidir["b"] == labels["node"])
+            bidir.join(lab, bidir["b"] == lab["node"])
             .groupBy("a", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -397,8 +412,9 @@ def label_propagation(
             .filter(F.col("__rk") == 1)
             .select(F.col("a").alias("node"), F.col("label").alias("__new"))
         )
-        labels = (
-            nodes.join(best, "node", "left")
+        labels, m = _superstep(
+            labels.select("node")
+            .join(_small(best, m["rows"]), "node", "left")  # a node per row at most
             .withColumn("label", F.coalesce(F.col("__new"), F.col("node")))
             .drop("__new")
         )
@@ -419,45 +435,39 @@ def bfs_hops(
 
     Frontier-expansion form: each round joins only the nodes FIRST
     discovered last round against the edge list (the classic Pregel
-    BFS superstep), unions into the running distance frame and
-    min-folds.  Per round: one equi-join shuffle + one groupBy -- the
-    frontier shrinks as the graph saturates, so late rounds are cheap.
-    Fixed `max_hops` keeps the loop deterministic and the oracle
-    SQL-expressible (recursive CTE with a hop cap); the frame persists
-    per round so lineage stays O(1) deep per superstep rather than
-    re-expanding the whole chain.
+    BFS superstep) and anti-joins what earlier rounds reached.  Per
+    round: one equi-join + one distinct -- the frontier shrinks as the
+    graph saturates, so late rounds are cheap.  Fixed `max_hops` keeps
+    the loop deterministic and the oracle SQL-expressible (recursive
+    CTE with a hop cap).  Each round's frontier is one `_superstep`, so
+    the distance frame is a flat union of per-level checkpoints; the
+    observed frontier size sizes the next round's joins, and an empty
+    one ends the search.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if not directed:
         e = e.union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    e = e.distinct().persist()
-    dist = sources.select(F.col("node")).distinct().withColumn(
-        "hops", F.lit(0).cast("long")
-    ).persist()
-    frontier = dist
+    e, _ = _superstep(e.distinct())
+    frontier, m = _superstep(
+        sources.select(F.col("node")).distinct().withColumn("hops", F.lit(0).cast("long"))
+    )
+    levels, seen = [frontier], m["rows"]
     for h in range(1, int(max_hops) + 1):
-        reached = (
-            frontier.join(e, frontier["node"] == e["a"])
+        fr = _small(frontier, m["rows"])
+        seen_nodes = reduce(DataFrame.union, [lv.select("node") for lv in levels])
+        # nodes seen for the FIRST time this round
+        frontier, m = _superstep(
+            fr.join(e, fr["node"] == e["a"])
             .select(F.col("b").alias("node"))
             .distinct()
+            .join(_small(seen_nodes, seen), "node", "left_anti")
+            .withColumn("hops", F.lit(h).cast("long"))
         )
-        # nodes seen for the FIRST time this round
-        new = reached.join(dist.select("node"), "node", "left_anti").withColumn(
-            "hops", F.lit(h).cast("long")
-        )
-        new = new.persist()
-        # isEmpty, not count: a full count job per round costs more than
-        # the partial cache misses it would avoid (measured equal-or-worse
-        # with count at sf0.1; per-round job overhead dominates BFS here)
-        if new.isEmpty():
-            new.unpersist()
+        if not m["rows"]:
             break
-        nxt = dist.union(new).persist()
-        dist.unpersist()
-        dist = nxt
-        frontier = new
-    e.unpersist()
-    return dist
+        levels.append(frontier)
+        seen += m["rows"]
+    return reduce(DataFrame.union, levels)
 
 
 def shortest_paths(
@@ -477,8 +487,9 @@ def shortest_paths(
     Unlike BFS, a cheaper path can arrive via MORE hops, so each round
     relaxes the FULL distance frame against the edge list (not just a
     frontier): cand = dist ⋈ edges -> (dst, cost+w), min-folded into
-    dist.  `max_hops` rounds of one equi-join + one groupBy each; the
-    distance frame persists per round so lineage stays flat.  The cap
+    dist.  `max_hops` rounds of one equi-join + one groupBy each; each
+    round's distance frame is one `_superstep`, so lineage stays flat,
+    and its observed row count sizes the next round's join.  The cap
     both bounds cost and keeps the oracle a hop-capped recursive CTE.
     """
     e = edges.select(
@@ -490,27 +501,19 @@ def shortest_paths(
                 F.col(dst).alias("a"), F.col(src).alias("b"), F.col(weight).alias("w")
             )
         )
-    e = e.distinct().persist()
-    dist = (
-        sources.select(F.col("node"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-        .persist()
+    e, _ = _superstep(e.distinct())
+    dist, m = _superstep(
+        sources.select(F.col("node")).distinct().withColumn("cost", F.lit(0).cast("long"))
     )
     for _ in range(int(max_hops)):
+        d = _small(dist, m["rows"])
         cand = (
-            dist.join(e, dist["node"] == e["a"])
+            d.join(e, d["node"] == e["a"])
             .select(F.col("b").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
         )
-        nxt = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .persist()
+        dist, m = _superstep(
+            dist.unionByName(cand).groupBy("node").agg(F.min("cost").alias("cost"))
         )
-        dist.unpersist()
-        dist = nxt
-    e.unpersist()
     return dist
 
 
@@ -580,61 +583,33 @@ def personalized_pagerank(
     rank_0 = teleport; rank_{i+1}(v) = (1-d)*tele(v) + d * sum of
     in-neighbor contributions, tele = 1/|seeds| on seeds else 0.
     Same execution shape and cross-engine determinism discipline as
-    pagerank (per-edge contributions summed as DECIMAL(38,18), one
-    shuffle per iteration, scalar-only driver traffic); the oracle is
-    the same unrolled SQL with the teleport vector swapped in.
+    pagerank (the shared `_power_iteration`: per-edge contributions
+    summed as DECIMAL(38,18), one shuffle and one `_superstep` per
+    iteration); the seed count is the row count observed on the seed
+    set's checkpoint.  The oracle is the same unrolled SQL with the
+    teleport vector swapped in.
     """
-    cols = [F.col(src).alias("__src"), F.col(dst).alias("__dst")]
-    if weight_col is not None:
-        # weighted variant: an edge contributes rank * w / strength(u)
-        # (strength = summed out-weights) -- endorsement proportional to
-        # interaction volume instead of 1/outdeg
-        cols.append(F.col(weight_col).alias("__w"))
-    e = edges.select(*cols)
-    sd = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-    n_seeds = sd.count()
-    nodes = (
+    e, out = _walk_edges(edges, src, dst, weight_col)
+    sd, s = _superstep(seeds.select(F.col(seeds.columns[0]).alias("node")).distinct())
+    tele = (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
         .distinct()
-        .join(sd.withColumn("__is_seed", F.lit(1)), "node", "left")
+        .join(_small(sd.withColumn("__is_seed", F.lit(1)), s["rows"]), "node", "left")
         .select(
             "node",
-            F.when(F.col("__is_seed").isNotNull(), F.lit(1.0 / n_seeds))
+            F.when(F.col("__is_seed").isNotNull(), F.lit(1.0 / s["rows"]))
             .otherwise(F.lit(0.0))
             .alias("__tele"),
         )
-        .persist()
     )
-    if weight_col is None:
-        deg = e.groupBy("__src").agg(F.count("*").alias("__od"))
-    else:
-        deg = e.groupBy("__src").agg(F.sum("__w").alias("__od"))
-    weighted = e.join(deg, "__src").persist()
-    ranks = nodes.select("node", "__tele", F.col("__tele").alias("rank"))
-    for _ in range(iterations):
-        contribs = (
-            weighted.join(ranks, weighted["__src"] == ranks["node"])
-            .select(
-                F.col("__dst").alias("node"),
-                (
-                    F.col("rank") / F.col("__od")
-                    if weight_col is None
-                    else F.col("rank") * F.col("__w") / F.col("__od")
-                ).cast("decimal(38,18)").alias("__c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__s"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            "__tele",
-            (
-                F.lit(1.0 - damping) * F.col("__tele")
-                + F.lit(damping)
-                * F.coalesce(F.col("__s").cast("double"), F.lit(0.0))
-            ).alias("rank"),
-        )
+    ranks = _power_iteration(
+        out,
+        tele.withColumn("rank", F.col("__tele")),
+        F.lit(1.0 - damping) * F.col("__tele"),
+        iterations,
+        damping,
+    )
     return ranks.select("node", "rank")
 
 
@@ -737,11 +712,7 @@ def modularity(
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
     )
-    com = communities.select(
-        F.col(node_col).alias("n"), F.col(community_col).alias("c")
-    ).persist()  # read three times (two endpoint tags + degree join);
-    # without it an iterative upstream (label_propagation) re-expands
-    # its whole join chain into each consumer's lineage
+    com = communities.select(F.col(node_col).alias("n"), F.col(community_col).alias("c"))
     tagged = (
         und.join(com.withColumnsRenamed({"n": "a", "c": "ca"}), "a")
         .join(com.withColumnsRenamed({"n": "b", "c": "cb"}), "b")
@@ -795,56 +766,42 @@ def hits(
     match bit-for-bit -- the g1 discipline).  a_0 = 1 everywhere.
 
     Scale: per iteration, two edge-keyed join+agg rounds (map-side
-    combined) and two one-row normalizer broadcasts; edge frame and
-    node frame persist across iterations.  Returns (node, hub,
-    authority) for every node, zeros where a side never scores.
+    combined), each one `_superstep` that observes its own L1
+    normalizer, so no one-row aggregate is joined back.  Returns (node,
+    hub, authority) for every node, zeros where a side never scores.
     """
-    e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")).persist()
-    nodes = (
+    e, _ = _superstep(edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst")))
+
+    def half(scored: DataFrame, to: str, name: str) -> DataFrame:
+        # each `to` node's summed edge scores (the last column of
+        # `scored`) over the L1 total, which is observed as a decimal and
+        # cast back to the sum's type; sized as a join's build side
+        raw, m = _superstep(
+            scored.groupBy(F.col(to).alias("node"))
+            .agg(F.sum(F.col(scored.columns[-1]).cast(_DEC)).alias("__raw")),
+            total=F.sum("__raw"),
+        )
+        total = F.lit(m["total"]).cast(_DEC).cast("double")
+        return _small(raw.select("node", (F.col("__raw").cast("double") / total).alias(name)), m["rows"])
+
+    # a_0 = 1 on every node, and every non-null edge end is a node
+    scored = e.filter(F.col("__dst").isNotNull()).withColumn("a", F.lit(1.0))
+    for _ in range(iterations):
+        hubs = half(scored, "__src", "h")
+        auth = half(e.join(hubs, e["__src"] == hubs["node"]), "__dst", "a")
+        scored = e.join(auth, e["__dst"] == auth["node"])
+    return (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
         .distinct()
-        .persist()
-    )
-    dec = "decimal(38,18)"
-    auth = nodes.withColumn("a", F.lit(1.0))
-    hubs = None
-    for _ in range(iterations):
-        hraw = (
-            e.join(auth, e["__dst"] == auth["node"])
-            .groupBy("__src")
-            .agg(F.sum(F.col("a").cast(dec)).alias("__hr"))
-        )
-        hsum = hraw.agg(F.sum("__hr").alias("__hs"))
-        hubs = hraw.crossJoin(F.broadcast(hsum)).select(
-            F.col("__src").alias("node"),
-            (F.col("__hr").cast("double") / F.col("__hs").cast("double")).alias("h"),
-        )
-        araw = (
-            e.join(hubs, e["__src"] == hubs["node"])
-            .groupBy("__dst")
-            .agg(F.sum(F.col("h").cast(dec)).alias("__ar"))
-        )
-        asum = araw.agg(F.sum("__ar").alias("__as"))
-        auth = araw.crossJoin(F.broadcast(asum)).select(
-            F.col("__dst").alias("node"),
-            (F.col("__ar").cast("double") / F.col("__as").cast("double")).alias("a"),
-        )
-        if iterations > 2:
-            # deep runs: truncate lineage per iteration or the plan tree
-            # nests one whole join round per iteration (k_core/bfs
-            # discipline); 2-iteration gates skip the checkpoint cost
-            auth = auth.localCheckpoint(eager=True)
-    out = (
-        nodes.join(hubs.withColumnRenamed("node", "__hn"), F.col("node") == F.col("__hn"), "left")
-        .join(auth.withColumnRenamed("node", "__an"), F.col("node") == F.col("__an"), "left")
+        .join(hubs, "node", "left")
+        .join(auth, "node", "left")
         .select(
             "node",
             F.round(F.coalesce(F.col("h"), F.lit(0.0)), 6).alias("hub"),
             F.round(F.coalesce(F.col("a"), F.lit(0.0)), 6).alias("authority"),
         )
     )
-    return out
 
 
 def betweenness_approx(
@@ -885,12 +842,12 @@ def betweenness_approx(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if not directed:
         e = e.union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    # eager localCheckpoint per superstep: each level/accumulator frame
-    # feeds TWO later consumers (the next level and the backward pass),
-    # and the two recurrences compound -- without lineage truncation the
+    # one `_superstep` per level and per accumulator frame: each feeds
+    # TWO later consumers (the next level and the backward pass), and
+    # the two recurrences compound -- without lineage truncation the
     # final plan nests every join of every round and the driver OOMs
     # compiling it (observed on a 30-node graph)
-    e = e.distinct().localCheckpoint()
+    e, _ = _superstep(e.distinct())
 
     lvl0, m = _superstep(
         sources.select(F.col("node")).distinct()
@@ -954,13 +911,12 @@ def betweenness_approx(
                 ).alias("delta")
             )
         )
-        full = (
+        full, _ = _superstep(
             cur.join(contrib.select("s", "node", "delta"), ["s", "node"], "left")
             .select(
                 "s", "node", "sigma",
                 F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta"),
             )
-            .localCheckpoint()
         )
         acc.append(full)
 
